@@ -1,6 +1,8 @@
 """Composite ETL flow — rebuild of ``dpe_enedis_ademe_etl_flow``
-(``etl_app.py:71-82``): extract → transform → load, passing the silver
-frame in memory, all stamped with one batch_id.
+(``etl_app.py:71-82``): extract → transform → load, all stamped with
+one batch_id. Each stage hands the next a scan of the zone it just
+wrote (transform reads silver, load reads gold), so no stage re-runs
+an upstream one and each API key is fetched once per run.
 
 Scheduling: the reference deploys this on a weekly Prefect cron
 (``etl_app.py:84-95``). The Spark-native equivalent is either an

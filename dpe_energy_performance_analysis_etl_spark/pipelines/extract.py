@@ -15,8 +15,10 @@ All HTTP is behind injected ``fetch`` callables so tests run offline
 (the reference's live-API tests are its weakest part, SURVEY §5).
 Spark-first deltas from the reference: the fan-out thread pool +
 rate limiter live per-executor inside mapInPandas; results align by
-key, not list position; the bronze/silver writes stay (zone layout is
-a contract) but everything between them is one lazy plan.
+key, not list position. Each zone write (bronze ``enedis_with_ban``,
+bronze ``ademe``, silver ``extraction``) is a durable boundary: the
+step returns a scan of the files it wrote, so every distinct key is
+fetched once per run and later actions never replay a fetch stage.
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ from dpe_energy_performance_analysis_etl_spark.config import EngineConfig
 from dpe_energy_performance_analysis_etl_spark.functions import departement_from_iris, full_address
 from dpe_energy_performance_analysis_etl_spark.operators import dedup_full, equi_join, suffix_columns
 from dpe_energy_performance_analysis_etl_spark.schema import normalize_columns, validate_required_columns
-from dpe_energy_performance_analysis_etl_spark.sources import read_csv, rest_lookup_join, write_parquet
+from dpe_energy_performance_analysis_etl_spark.sources import materialize_parquet, read_csv, rest_lookup_join
 from dpe_energy_performance_analysis_etl_spark.utils import log_run, retry
 
 # Required Enedis input columns (``extract.py:317-331``; case-tolerant).
@@ -93,7 +95,6 @@ class DataExtractor:
         self.output: DataFrame | None = None
 
     # ------------------------------------------------------ step 1
-    @retry(times=3, delay_seconds=1.0)
     def get_enedis_data(
         self,
         from_input: str,
@@ -121,12 +122,12 @@ class DataExtractor:
         return self
 
     # ------------------------------------------------------ step 2
-    @retry(times=3, delay_seconds=1.0)
     def get_ban_data(self, fanout: int | None = None) -> "DataExtractor":
         """Distinct addresses → geocoder lookup join (S5/J5,
         ``extract.py:418-463``). Dedup-before-fanout is kept: the API
         is hit once per distinct address regardless of fact-side
-        duplication (the reference's lru_cache, done relationally)."""
+        duplication (the reference's lru_cache, done relationally).
+        Builds the plan only; the fetch runs in the bronze write."""
         assert self.input is not None, "call get_enedis_data first"
         assert self.fetch_ban is not None, "no BAN fetch function configured"
         results = rest_lookup_join(
@@ -142,9 +143,10 @@ class DataExtractor:
 
     # ------------------------------------------------------ step 3
     @log_run()
-    def merge_enedis_ban(self, save_bronze: bool = True) -> DataFrame:
+    def merge_enedis_ban(self) -> DataFrame:
         """Suffix provenance + inner join J1 (``extract.py:517-546``);
-        BAN side is per-distinct-address → broadcast-sized in practice."""
+        BAN side is per-distinct-address → broadcast-sized in practice.
+        Returns the bronze ``enedis_with_ban`` files."""
         assert self.input is not None and self.ban_data is not None
         enedis = suffix_columns(self.input, "_enedis")
         ban = suffix_columns(
@@ -159,16 +161,15 @@ class DataExtractor:
             how="inner",
             broadcast_right=True,
         )
-        if save_bronze:
-            write_parquet(merged, f"{self.config.zones.bronze}/enedis_with_ban")
-        self.output = merged
-        return merged
+        self.output = materialize_parquet(merged, f"{self.config.zones.bronze}/enedis_with_ban")
+        return self.output
 
     # ------------------------------------------------------ step 4
     @retry(times=3, delay_seconds=1.0)
     def get_ademe_data(self, fanout: int | None = None) -> DataFrame:
         """Distinct BAN ids → 1→N DPE lookup (S6/U3,
-        ``extract.py:465-515``), flatMap semantics via mapInPandas."""
+        ``extract.py:465-515``), flatMap semantics via mapInPandas.
+        Returns the bronze ``ademe`` files."""
         assert self.output is not None, "call merge_enedis_ban first"
         assert self.fetch_ademe is not None, "no ADEME fetch function configured"
         ademe = rest_lookup_join(
@@ -179,15 +180,15 @@ class DataExtractor:
             fanout_partitions=fanout,
         )
         ademe = suffix_columns(ademe.drop("id_ban_key"), "_ademe")
-        write_parquet(ademe, f"{self.config.zones.bronze}/ademe")
-        return ademe
+        return materialize_parquet(ademe, f"{self.config.zones.bronze}/ademe")
 
     # ------------------------------------------------------ step 5
     @log_run()
     def merge_all(self, ademe: DataFrame | None = None) -> DataFrame:
         """Left join J2 (keys cast to string) + full dedup A4 →
         normalize names P2 → stamp batch_id F11 → silver
-        (``extract.py:548-585``)."""
+        (``extract.py:548-585``). Returns the silver ``extraction``
+        files."""
         assert self.output is not None
         if ademe is None:
             ademe = self.spark.read.parquet(f"{self.config.zones.bronze}/ademe")
@@ -202,9 +203,8 @@ class DataExtractor:
         merged = dedup_full(merged)
         merged = normalize_columns(merged, sort=True)
         merged = merged.withColumn("batch_id", F.lit(self.config.batch_id))
-        write_parquet(merged, f"{self.config.zones.silver}/extraction")
-        self.output = merged
-        return merged
+        self.output = materialize_parquet(merged, f"{self.config.zones.silver}/extraction")
+        return self.output
 
     # ------------------------------------------------------ flow
     def extract(

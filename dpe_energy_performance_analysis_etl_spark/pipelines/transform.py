@@ -6,9 +6,12 @@ imputation A2 → derive conso_kwh F5 / arrondissement F4 / conso_kwh_m2
 F6 / consumption diffs F7 → entity split P5+SO2 (six gold tables) →
 grouped statistical tests A3 → gold writes S7.
 
-One lazy plan end-to-end; only the imputation stats and the schema
-autocast voting collect (tiny) aggregate rows to the driver. The six
-entity writes share the upstream plan via a cached silver frame.
+Starts from the silver files and stays one lazy plan up to the gold
+writes; only the imputation stats and the schema autocast voting
+collect (tiny) aggregate rows to the driver. The six entity writes
+share the upstream plan via a cached frame that lives only until they
+finish; ``save_all`` returns scans of the gold files, so the load
+reads gold, not the transform's lineage.
 """
 
 from __future__ import annotations
@@ -29,7 +32,7 @@ from dpe_energy_performance_analysis_etl_spark.schema import (
     load_schema_json,
     normalize_columns,
 )
-from dpe_energy_performance_analysis_etl_spark.sources import write_parquet
+from dpe_energy_performance_analysis_etl_spark.sources import materialize_parquet
 
 # Default golden config (shape of ``schema_golden_data.json:1-100``;
 # entity PKs from ``load.py:45-52``). Externalizable via
@@ -192,9 +195,13 @@ class DataTransformer:
         return self
 
     def save_all(self) -> dict[str, DataFrame]:
-        """S7 ×6 — gold zone writes (``transform.py:291-311``)."""
-        for name, df in self.entities.items():
-            write_parquet(df, f"{self.config.zones.gold}/{name}")
+        """S7 ×6 — gold zone writes (``transform.py:291-311``); returns
+        the gold files and releases the ``select_and_split`` cache."""
+        self.entities = {
+            name: materialize_parquet(df, f"{self.config.zones.gold}/{name}")
+            for name, df in self.entities.items()
+        }
+        self.df.unpersist()
         return self.entities
 
     def run(self, types_schema_fpath: str | None = None) -> dict[str, DataFrame]:

@@ -128,6 +128,15 @@ def write_parquet(
     writer.parquet(path)
 
 
+def materialize_parquet(df: DataFrame, path: str) -> DataFrame:
+    """Write ``df`` to a zone and return a scan of the files just
+    written. The zone becomes a durable boundary: later actions read
+    parquet instead of replaying ``df``'s lineage (and any fetch stage
+    inside it)."""
+    write_parquet(df, path)
+    return read_parquet(df.sparkSession, path)
+
+
 def write_json_lines(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """S8 — JSON-lines sink (``filestorage_helper.py:101-123``)."""
     df.write.mode(mode).json(path)

@@ -140,6 +140,83 @@ def test_loader_upsert_strategy(extractor, enedis_csv, spark, zones):
         assert pk == tuple(ENTITY_PKS[table]) and n > 0
 
 
+def _counted(fetch, acc):
+    """Count calls to ``fetch`` in a Spark accumulator: the fetch runs
+    inside executor tasks, where a driver-side counter never sees it."""
+
+    def call(key):
+        acc.add(1)
+        return fetch(key)
+
+    return call
+
+
+def _distinct(spark, path, col):
+    return {r[0] for r in spark.read.parquet(path).select(col).distinct().collect()}
+
+
+def test_run_etl_fetches_each_key_once(
+    spark, zones, enedis_csv, fake_fetch_ban, fake_fetch_ademe, tmp_path
+):
+    """Every distinct API key is fetched once per run: each zone write is
+    a durable boundary, so no later action (silver/gold writes, autocast
+    and impute collects, load) replays a fetch stage. A second run over
+    the same sink appends no entity row."""
+    from dpe_energy_performance_analysis_etl_spark.config import EngineConfig
+    from dpe_energy_performance_analysis_etl_spark.pipelines.etl import parquet_sink, run_etl
+
+    sc = spark.sparkContext
+    ban_calls, ademe_calls = sc.accumulator(0), sc.accumulator(0)
+    fetch_ban = _counted(fake_fetch_ban, ban_calls)
+    fetch_ademe = _counted(fake_fetch_ademe, ademe_calls)
+    read_existing, append = parquet_sink(spark, str(tmp_path / "gold_db"))
+
+    def run(config):
+        return run_etl(
+            spark, enedis_csv, fetch_ban, fetch_ademe, config=config,
+            read_existing_keys=read_existing, append=append,
+        )
+
+    first = run(zones)
+    addresses = (
+        DataExtractor(spark, zones).get_enedis_data(enedis_csv)
+        .input.select("full_adress").distinct().count()
+    )
+    ban_ids = _distinct(spark, f"{zones.zones.bronze}/enedis_with_ban", "id_BAN")
+    assert ban_calls.value == addresses
+    assert ademe_calls.value == len(ban_ids)
+    assert sum(first.values()) > 0
+
+    second = run(EngineConfig())
+    assert (ban_calls.value, ademe_calls.value) == (2 * addresses, 2 * len(ban_ids))
+    entity_rows = {t: n for t, n in second.items() if t != "tests_statistiques_dpe"}
+    assert entity_rows and sum(entity_rows.values()) == 0, second
+
+
+def test_zones_agree_under_nondeterministic_fetch(spark, zones, enedis_csv, fake_fetch_ban):
+    """A geocoder that answers with a fresh id on every call (a live API
+    may change its answer between calls) still leaves bronze, silver and
+    gold with one id set: each zone is built from the files of the zone
+    before it, never from a second fetch."""
+    import uuid
+
+    from dpe_energy_performance_analysis_etl_spark.pipelines.etl import offline_fetchers, run_etl
+
+    def fetch_ban(addr):
+        return [{**rec, "id_ban": f"ban_{uuid.uuid4()}"} for rec in fake_fetch_ban(addr)]
+
+    _, fetch_ademe = offline_fetchers()
+    run_etl(
+        spark, enedis_csv, fetch_ban, fetch_ademe, config=zones,
+        read_existing_keys=lambda table, key_cols: None, append=lambda df, table: None,
+    )
+    bronze = _distinct(spark, f"{zones.zones.bronze}/enedis_with_ban", "id_BAN")
+    silver = _distinct(spark, f"{zones.zones.silver}/extraction", "id_ban")
+    gold = _distinct(spark, f"{zones.zones.gold}/adresses", "id_ban")
+    assert len(bronze) == 12  # one fresh id per distinct address
+    assert bronze == silver == gold
+
+
 def test_pandas_api_on_spark_migration_path(spark):
     """The reference's users write pandas; pyspark.pandas runs that
     style unchanged on this engine's session and agrees with the
