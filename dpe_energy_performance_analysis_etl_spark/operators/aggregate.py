@@ -18,6 +18,8 @@ Scale design:
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -58,10 +60,11 @@ def impute_numeric(
     ``transform.py:104-144``): for each float column, fill NULLs with
     the MEDIAN when the column contains IQR outliers, else the MEAN.
 
-    One aggregate computes mean/median/Q1/Q3/outlier-count for every
-    column simultaneously; one ``na.fill`` applies the result. Returns
-    (filled_df, {"median": [...], "mean": [...]}) mirroring the
-    reference's ``cols_filled`` bookkeeping.
+    One aggregate computes mean/median/Q1/Q3/min/max for every column
+    simultaneously; a column has IQR outliers when its min is below
+    the lower fence or its max above the upper one. One ``na.fill``
+    applies the result. Returns (filled_df, {"median": [...], "mean":
+    [...]}) mirroring the reference's ``cols_filled`` bookkeeping.
     """
     if columns is None:
         columns = [
@@ -82,34 +85,34 @@ def impute_numeric(
         aggs.append(F.expr(f"{fn}(`{c}`, 0.5)").alias(f"{c}__median"))
         aggs.append(q[0].alias(f"{c}__q1"))
         aggs.append(q[1].alias(f"{c}__q3"))
+        aggs.append(F.min(c).alias(f"{c}__min"))
+        aggs.append(F.max(c).alias(f"{c}__max"))
     row = df.agg(*aggs).collect()[0].asDict()
-
-    # outlier presence per column needs the fences first; do one more
-    # single agg pass counting values outside the fences.
-    fence_aggs = []
-    fences: dict[str, tuple[float, float]] = {}
-    for c in columns:
-        q1, q3 = row[f"{c}__q1"], row[f"{c}__q3"]
-        if q1 is None or q3 is None:
-            continue
-        iqr = q3 - q1
-        lo, hi = q1 - 1.5 * iqr, q3 + 1.5 * iqr
-        fences[c] = (lo, hi)
-        fence_aggs.append(
-            F.count(F.when((F.col(c) < lo) | (F.col(c) > hi), 1)).alias(f"{c}__outliers")
-        )
-    outlier_counts = df.agg(*fence_aggs).collect()[0].asDict() if fence_aggs else {}
 
     fill: dict[str, float] = {}
     filled: dict[str, list[str]] = {"median": [], "mean": []}
     for c in columns:
-        has_outliers = outlier_counts.get(f"{c}__outliers", 0) > 0
+        q1, q3 = row[f"{c}__q1"], row[f"{c}__q3"]
+        has_outliers = False
+        if q1 is not None and q3 is not None:
+            iqr = q3 - q1
+            lo, hi = q1 - 1.5 * iqr, q3 + 1.5 * iqr
+            has_outliers = _spark_lt(row[f"{c}__min"], lo) or _spark_lt(hi, row[f"{c}__max"])
         value = row[f"{c}__median"] if has_outliers else row[f"{c}__mean"]
         if value is None:
             continue
         fill[c] = float(value)
         filled["median" if has_outliers else "mean"].append(c)
     return (df.na.fill(fill) if fill else df), filled
+
+
+def _spark_lt(a: float, b: float) -> bool:
+    """``a < b`` in Spark SQL's double order, where NaN equals NaN and
+    is larger than every other value (Python's ``<`` is False for
+    any NaN operand)."""
+    if math.isnan(a):
+        return False
+    return math.isnan(b) or a < b
 
 
 _STATS_SCHEMA = T.StructType(

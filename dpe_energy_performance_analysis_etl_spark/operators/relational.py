@@ -96,25 +96,25 @@ def equi_join(
     return left.join(right, on=cond, how=how)
 
 
-def anti_join_new_rows(
-    batch: DataFrame,
-    existing: DataFrame,
-    key_cols: list[str],
-    broadcast_existing: bool = False,
-) -> DataFrame:
+def anti_join_new_rows(batch: DataFrame, existing: DataFrame, key_cols: list[str]) -> DataFrame:
     """J3/J4 — idempotent-append filter: keep only batch rows whose
     key is NOT already present (single-key ``isin`` variant
     ``load.py:139-149``; composite merge+indicator variant
     ``load.py:150-160`` — one left_anti covers both).
 
-    At scale: ``existing`` should already be pruned to the key columns
-    (see ``read_jdbc_table(columns=key_cols)``); if the key set is
-    small, broadcast it and no shuffle happens at all.
+    ``existing`` is first reduced to the keys this batch holds (a
+    left_semi join against the batch's keys), then the batch is
+    left_anti-joined against that remainder. The join inputs are
+    bounded by the batch, not by the history, so memory does not grow
+    with the sink; AQE picks both join strategies. ``existing`` should
+    already be pruned to the key columns (see
+    ``read_jdbc_table(columns=key_cols)``). ``batch`` is read twice, so
+    pass a materialized frame (a file scan), not a costly lineage.
     """
-    keys = existing.select(*key_cols).dropDuplicates(key_cols)
-    if broadcast_existing:
-        keys = F.broadcast(keys)
-    return batch.join(keys, on=key_cols, how="left_anti")
+    present = existing.select(*key_cols).join(
+        batch.select(*key_cols), on=key_cols, how="left_semi"
+    )
+    return batch.join(present, on=key_cols, how="left_anti")
 
 
 # ------------------------------------------------------------- dedup / distinct

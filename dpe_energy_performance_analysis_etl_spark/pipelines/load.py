@@ -6,7 +6,14 @@ Per table (``save_one_table``, ``load.py:85-176``): PK cast to string
 → read EXISTING KEY COLUMNS ONLY from the sink (the reference pulled
 the whole table into pandas, ``load.py:127-131`` — at scale that's the
 difference between reading a key index and reading terabytes) →
-left_anti join J3/J4 → skip-if-empty gate → append S12.
+left_anti join J3/J4 against the existing keys that match the batch →
+skip-if-empty gate → append S12.
+
+``run`` overlaps the tables' gates: it computes every table's new-row
+frame and count at the same time, one thread per table, then appends
+one table at a time in ``LOAD_ORDER``, so the sink's foreign keys are
+satisfied in the same order as before. A gate that raises stops the
+run before any append.
 
 The sink is injected as (read_existing_keys, append) callables;
 production wires ``sources.read_jdbc_table`` / ``append_jdbc_table``,
@@ -17,6 +24,7 @@ for correctness coverage.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -24,7 +32,7 @@ from dpe_energy_performance_analysis_etl_spark.config import EngineConfig
 from dpe_energy_performance_analysis_etl_spark.operators import anti_join_new_rows
 from dpe_energy_performance_analysis_etl_spark.pipelines.transform import ENTITY_PKS, LOAD_ORDER
 from dpe_energy_performance_analysis_etl_spark.sources import append_jdbc_table, read_jdbc_table
-from dpe_energy_performance_analysis_etl_spark.utils import log_run
+from dpe_energy_performance_analysis_etl_spark.utils import log_run, run_concurrently
 
 
 class DataLoader:
@@ -81,44 +89,50 @@ class DataLoader:
         upsert_jdbc_table(df, cfg.jdbc_url, table, pk, cfg.jdbc_properties)
 
     # ------------------------------------------------- per-table
+    def _new_rows(self, df: DataFrame, table: str) -> tuple[DataFrame, int]:
+        """The rows of ``df`` to write to ``table`` and their count: PK
+        cast to string (``load.py:110-120``), existing keys removed
+        (append strategy only), deterministic keep-first on PK within
+        the batch (``load.py:188-210``)."""
+        pk = ENTITY_PKS[table]
+        df = df.withColumns({k: F.col(k).cast("string") for k in pk})
+        if self.strategy == "append":
+            existing = self._read_existing(table, pk)
+            if existing is not None:
+                df = anti_join_new_rows(df, existing, pk)
+        df = df.dropDuplicates(pk)
+        return df, df.count()
+
+    def _write(self, table: str, df: DataFrame, n: int) -> int:
+        """Skip-if-empty gate (``load.py:163-165``), then append or
+        upsert."""
+        if n:
+            if self.strategy == "upsert":
+                self._upsert(df, table, ENTITY_PKS[table])
+            else:
+                self._append(df, table)
+        self.loaded_counts[table] = n
+        return n
+
     @log_run()
     def save_one_table(self, df: DataFrame, table: str) -> int:
         """Idempotent append (``load.py:85-176``). Returns rows written."""
-        pk = ENTITY_PKS[table]
-        for k in pk:
-            df = df.withColumn(k, F.col(k).cast("string"))  # load.py:110-120
-        if self.strategy == "upsert":
-            df = df.dropDuplicates(pk)
-            n = df.count()
-            if n == 0:
-                self.loaded_counts[table] = 0
-                return 0
-            self._upsert(df, table, pk)
-            self.loaded_counts[table] = n
-            return n
-        existing = self._read_existing(table, pk)
-        if existing is not None:
-            df = anti_join_new_rows(df, existing, pk, broadcast_existing=True)
-        # deterministic keep-first on PK within the batch (load.py:188-210)
-        df = df.dropDuplicates(pk)
-        n = df.count()
-        if n == 0:
-            self.loaded_counts[table] = 0
-            return 0  # skip-if-empty gate, load.py:163-165
-        self._append(df, table)
-        self.loaded_counts[table] = n
-        return n
+        return self._write(table, *self._new_rows(df, table))
 
     # ------------------------------------------------- flow
     def run(self, entities: dict[str, DataFrame] | None = None) -> dict[str, int]:
         """Load all entities in FK-safe order (``load.py:181-212``);
-        reads the gold zone when no frames are passed."""
+        reads the gold zone when no frames are passed. The gates run
+        concurrently, the appends one at a time in ``LOAD_ORDER``."""
         if entities is None:
             entities = {
                 name: self.spark.read.parquet(f"{self.config.zones.gold}/{name}")
                 for name in LOAD_ORDER
             }
-        for name in LOAD_ORDER:
-            if name in entities:
-                self.save_one_table(entities[name], name)
+        tables = [name for name in LOAD_ORDER if name in entities]
+        gated = run_concurrently(
+            self.spark, {name: partial(self._new_rows, entities[name], name) for name in tables}
+        )
+        for name in tables:
+            self._write(name, *gated[name])
         return self.loaded_counts

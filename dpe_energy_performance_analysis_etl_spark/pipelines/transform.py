@@ -10,11 +10,14 @@ Starts from the silver files and stays one lazy plan up to the gold
 writes; only the imputation stats and the schema autocast voting
 collect (tiny) aggregate rows to the driver. The six entity writes
 share the upstream plan via a cached frame that lives only until they
-finish; ``save_all`` returns scans of the gold files, so the load
-reads gold, not the transform's lineage.
+finish, and they overlap: ``save_all`` runs them at the same time, one
+thread per entity, since none reads another's output. It returns scans
+of the gold files, so the load reads gold, not the transform's lineage.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -33,6 +36,7 @@ from dpe_energy_performance_analysis_etl_spark.schema import (
     normalize_columns,
 )
 from dpe_energy_performance_analysis_etl_spark.sources import materialize_parquet
+from dpe_energy_performance_analysis_etl_spark.utils import run_concurrently
 
 # Default golden config (shape of ``schema_golden_data.json:1-100``;
 # entity PKs from ``load.py:45-52``). Externalizable via
@@ -195,12 +199,16 @@ class DataTransformer:
         return self
 
     def save_all(self) -> dict[str, DataFrame]:
-        """S7 ×6 — gold zone writes (``transform.py:291-311``); returns
-        the gold files and releases the ``select_and_split`` cache."""
-        self.entities = {
-            name: materialize_parquet(df, f"{self.config.zones.gold}/{name}")
-            for name, df in self.entities.items()
-        }
+        """S7 ×6 — gold zone writes (``transform.py:291-311``), run
+        concurrently; returns the gold files and releases the
+        ``select_and_split`` cache."""
+        self.entities = run_concurrently(
+            self.spark,
+            {
+                name: partial(materialize_parquet, df, f"{self.config.zones.gold}/{name}")
+                for name, df in self.entities.items()
+            },
+        )
         self.df.unpersist()
         return self.entities
 

@@ -132,9 +132,10 @@ def materialize_parquet(df: DataFrame, path: str) -> DataFrame:
     """Write ``df`` to a zone and return a scan of the files just
     written. The zone becomes a durable boundary: later actions read
     parquet instead of replaying ``df``'s lineage (and any fetch stage
-    inside it)."""
+    inside it). The scan takes ``df``'s schema, which the write just
+    produced, instead of inferring it from the footers in a Spark job."""
     write_parquet(df, path)
-    return read_parquet(df.sparkSession, path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def write_json_lines(df: DataFrame, path: str, mode: str = "overwrite") -> None:

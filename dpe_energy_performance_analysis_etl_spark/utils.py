@@ -10,6 +10,10 @@ Reference parity:
     ``_`` + lowercase (``utils/fonctions.py:59-73``). Pure Python — it
     operates on column *names*, never on row data.
   - dated file names (``utils/fonctions.py:75-79``).
+
+``run_concurrently`` overlaps independent Spark actions (the gold
+writes, the load gates): at batch size a pipeline is bound by each
+action's driver-side planning and commit, not by executor work.
 """
 
 from __future__ import annotations
@@ -22,11 +26,16 @@ import re
 import time
 import unicodedata
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any, TypeVar
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import SparkSession
 
 logger = logging.getLogger("dpe_spark_engine")
 
 F = TypeVar("F", bound=Callable[..., Any])
+R = TypeVar("R")
 
 _NON_ALNUM = re.compile(r"[^0-9a-zA-Z]+")
 
@@ -104,3 +113,22 @@ def log_run(correlation_id: str | None = None):
         return wrapper  # type: ignore[return-value]
 
     return deco
+
+
+def run_concurrently(spark: SparkSession, calls: dict[str, Callable[[], R]]) -> dict[str, R]:
+    """Run independent Spark actions at the same time, one thread per
+    call, and return their results by name once all have finished.
+
+    Each call is wrapped with ``inheritable_thread_target`` as it is
+    submitted, so its jobs keep the caller's job group, description and
+    other local properties (each thread gets its own copy of them; a
+    plain thread would start with none). If calls raise, the first one
+    in ``calls`` order is re-raised after every call has finished."""
+    if not calls:
+        return {}
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(call))
+            for name, call in calls.items()
+        }
+    return {name: future.result() for name, future in futures.items()}

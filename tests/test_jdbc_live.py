@@ -92,11 +92,11 @@ def test_jdbc_idempotent_append_pipeline(spark, derby_url, props):
     append_jdbc_table(region, derby_url, "REGION_T", props)
 
     existing = read_jdbc_table(spark, derby_url, "REGION_T", props, columns=["R_REGIONKEY"])
-    fresh = anti_join_new_rows(region, existing, ["R_REGIONKEY"], broadcast_existing=True)
+    fresh = anti_join_new_rows(region, existing, ["R_REGIONKEY"])
     assert fresh.count() == 0  # everything already present
 
     two_new = region.withColumn("R_REGIONKEY", F.col("R_REGIONKEY") + 100)
-    fresh2 = anti_join_new_rows(two_new, existing, ["R_REGIONKEY"], broadcast_existing=True)
+    fresh2 = anti_join_new_rows(two_new, existing, ["R_REGIONKEY"])
     append_jdbc_table(fresh2, derby_url, "REGION_T", props)
     assert read_jdbc_table(spark, derby_url, "REGION_T", props).count() == 2 * region.count()
 

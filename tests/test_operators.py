@@ -53,23 +53,38 @@ def test_suffix_and_union_and_distinct(spark):
 
 
 def test_iqr_bounds_and_impute_median_vs_mean(spark):
-    # col_out has an extreme outlier -> median fill; col_plain -> mean fill
-    pdf = pd.DataFrame(
-        {
-            "col_out": [1.0, 2.0, 3.0, 4.0, 1000.0, None],
-            "col_plain": [1.0, 2.0, 3.0, 4.0, 5.0, None],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    bounds = iqr_bounds(df, ["col_out"])
+    from pyspark.sql import functions as F
+
+    # col_out has an extreme outlier -> median fill; col_plain -> mean
+    # fill; col_low's only outlier is below Q1; col_nan holds a NaN,
+    # which Spark orders above every value; col_null is all-null
+    nan = float("nan")
+    rows = [
+        (1.0, 1.0, 1.0, 1.0, None),
+        (2.0, 2.0, 2.0, 2.0, None),
+        (3.0, 3.0, 3.0, 3.0, None),
+        (4.0, 4.0, 4.0, 4.0, None),
+        (1000.0, 5.0, -1000.0, nan, None),
+        (None, None, None, None, None),
+    ]
+    cols = ["col_out", "col_plain", "col_low", "col_nan", "col_null"]
+    df = spark.createDataFrame(rows, ", ".join(f"{c} double" for c in cols))
+    bounds = iqr_bounds(df, cols)
     lo, hi = bounds["col_out"]
     assert lo < 1.0 and hi < 1000.0  # 1000 is outside the fence
+    assert "col_null" not in bounds
     filled, report = impute_numeric(df)
-    assert "col_out" in report["median"] and "col_plain" in report["mean"]
+    assert report == {"median": ["col_out", "col_low", "col_nan"], "mean": ["col_plain"]}
+    # the same choice as counting the values outside the fences
+    for c, (lo, hi) in bounds.items():
+        outliers = df.where((F.col(c) < lo) | (F.col(c) > hi)).count()
+        assert c in report["median" if outliers else "mean"], c
     got = {r["col_out"] for r in filled.select("col_out").collect()}
     assert 3.0 in got  # median of [1,2,3,4,1000]
     got_plain = [r["col_plain"] for r in filled.select("col_plain").collect()]
     assert 3.0 in got_plain  # mean of [1..5]
+    assert 2.0 in {r["col_low"] for r in filled.select("col_low").collect()}  # median
+    assert filled.where(F.col("col_null").isNull()).count() == len(rows)
 
 
 def test_group_stats_sentinels_and_values(spark):

@@ -217,6 +217,131 @@ def test_zones_agree_under_nondeterministic_fetch(spark, zones, enedis_csv, fake
     assert bronze == silver == gold
 
 
+def test_run_jobs_keep_the_callers_job_group(extractor, enedis_csv, spark, zones):
+    """The gold writes and load gates run on worker threads; every Spark
+    job they launch still carries the caller's job group (a plain thread
+    would start with no local properties and launch ungrouped jobs)."""
+    silver = extractor.extract(enedis_csv)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("transform-and-load", "transform and load under one group")
+    try:
+        entities = DataTransformer(spark, silver, zones).run()
+        counts = DataLoader(
+            spark, zones, read_existing_keys=lambda t, k: None, append=lambda df, t: df.count()
+        ).run(entities)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    assert sum(counts.values()) > 0
+    assert tracker.getJobIdsForGroup("transform-and-load")
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_failed_gate_stops_load_before_any_append(extractor, enedis_csv, spark, zones):
+    """The gates run before any append, so a gate that raises for one
+    table (here the third in load order) surfaces from ``run`` and
+    nothing reaches the sink, not even the tables ahead of it."""
+    silver = extractor.extract(enedis_csv)
+    entities = DataTransformer(spark, silver, zones).run()
+    appended = []
+
+    def read_existing(table, key_cols):
+        if table == "villes":
+            raise ConnectionError("sink unreachable")
+        return None
+
+    loader = DataLoader(
+        spark, zones, read_existing_keys=read_existing, append=lambda df, t: appended.append(t)
+    )
+    with pytest.raises(ConnectionError, match="sink unreachable"):
+        loader.run(entities)
+    assert LOAD_ORDER.index("villes") == 2 and appended == []
+
+
+def _children(node):
+    """Children of a physical plan node, looking through AQE's
+    adaptive root and query stages."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if name.endswith("QueryStageExec"):
+        return [node.plan()]
+    if name == "ReusedExchangeExec":
+        return [node.child()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _scans_before_a_join(node):
+    """Root paths of the file scans that feed ``node`` without a join
+    in between."""
+    name = node.getClass().getSimpleName()
+    if "Join" in name:
+        return []
+    if name == "FileSourceScanExec":
+        return [node.relation().location().rootPaths().head().toString()]
+    return [p for child in _children(node) for p in _scans_before_a_join(child)]
+
+
+def _broadcast_inputs(node):
+    """File scans read by every BroadcastExchange of the plan under
+    ``node``, up to the nearest join below the exchange."""
+    found = []
+    if node.getClass().getSimpleName() == "BroadcastExchangeExec":
+        found = _scans_before_a_join(node)
+    return found + [p for child in _children(node) for p in _broadcast_inputs(child)]
+
+
+def test_load_gate_joins_only_the_batch_keys(spark, tmp_path):
+    """A sink whose key column is larger than the broadcast threshold:
+    a second load appends no row, and no broadcast in the gate's plan
+    reads the sink directly. The gate first reduces the history to the
+    batch's keys, so its memory is bounded by the batch, not the sink."""
+    from pyspark.sql import functions as F
+
+    from dpe_energy_performance_analysis_etl_spark.operators import anti_join_new_rows
+    from dpe_energy_performance_analysis_etl_spark.pipelines.etl import parquet_sink
+
+    sink = tmp_path / "gold_db"
+    read_existing, append = parquet_sink(spark, str(sink))
+    history = spark.range(50_000).select(
+        F.format_string("ban_%08d", "id").alias("id_ban"), F.lit("old").alias("label_ban")
+    )
+    append(history, "adresses")
+    rows = [(f"ban_{i:08d}", "seen") for i in range(0, 40, 4)]
+    rows += [(f"new_{i}", "new") for i in range(10)]
+    gold = str(tmp_path / "gold" / "adresses")
+    spark.createDataFrame(rows, "id_ban string, label_ban string").write.parquet(gold)
+    batch = spark.read.parquet(gold)
+
+    threshold_key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(threshold_key)
+    spark.conf.set(threshold_key, str(64 * 1024))
+    try:
+        keys = read_existing("adresses", ["id_ban"])
+        assert keys._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > 64 * 1024
+
+        def load():
+            loader = DataLoader(spark, read_existing_keys=read_existing, append=append)
+            return loader.run({"adresses": batch})["adresses"]
+
+        assert load() == 10
+        assert load() == 0
+        gate = anti_join_new_rows(batch, read_existing("adresses", ["id_ban"]), ["id_ban"])
+        assert gate.collect() == []
+        plan = gate._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set(threshold_key, threshold)
+    broadcast = _broadcast_inputs(plan)
+    assert broadcast, "expected the batch's keys to be broadcast"
+    assert not [p for p in broadcast if str(sink) in p], broadcast
+
+
 def test_pandas_api_on_spark_migration_path(spark):
     """The reference's users write pandas; pyspark.pandas runs that
     style unchanged on this engine's session and agrees with the

@@ -89,7 +89,6 @@ ALLOWED: dict[tuple[str, str], str] = {
     ("operators/quantiles.py", "_trimmed_mean_histprune"): "domain: per-group stats/bounds/offsets",
     ("operators/quantiles.py", "grouped_trimmed_mean"): "partitions/domain: offsets + totals",
     ("operators/relational.py", "equi_join"): "flag: broadcast_right caller assertion",
-    ("operators/relational.py", "anti_join_new_rows"): "flag: broadcast_existing caller assertion",
     ("operators/sketch.py", "cms_lookup"): "model: w x d sketch cells",
     ("operators/sketch.py", "ams_f2"): "scalar: median row",
     ("operators/sketch.py", "kmv_pairwise_setops"): "domain: per-group k-th thresholds / <=|groups| estimates",
