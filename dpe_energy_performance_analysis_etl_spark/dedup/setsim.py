@@ -156,8 +156,8 @@ def adaptive_jaccard_join(
     """Pick the posting join or the AllPairs prefix filter from a
     cheap df-distribution probe (VERDICT r5 ask #4 follow-through).
 
-    Measured on seeded Zipf fixtures (tools/zipf_fixture_bench.py,
-    NOTES round-6): the prefix filter collapses candidate volume
+    Measured on seeded Zipf fixtures (cc2f0cf:tools/zipf_fixture_bench.py,
+    the script's last commit; NOTES round-6): the prefix filter collapses candidate volume
     457× on Zipf(1.1) text (5.18M → 11.3k pairs, max posting df
     1438 → 4) — but on a SINGLE box the lean plain join still wins
     wall-clock up to ~10⁸ candidates (19.4 s vs 25.0 s at 80M),

@@ -65,14 +65,6 @@ def simhash_sig(
     return votes.select("doc", sig.alias("simhash"))
 
 
-def simhash_64(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", fanout: int | None = None
-) -> DataFrame:
-    """(doc, simhash bigint) — 64-bit SimHash of each document's token
-    multiset."""
-    return simhash_sig(df, text_col, id_col, bits=64, fanout=fanout)
-
-
 def simhash_near_dup_pairs(
     df: DataFrame,
     text_col: str = "text",

@@ -3,15 +3,11 @@ from dpe_energy_performance_analysis_etl_spark.functions.scalar import (
     substring_cast,
     extract_digits,
     decimal_comma_to_double,
-    parse_timestamp,
     safe_divide,
-    unit_scale_with_fallback,
     abs_diff,
-    with_literal,
     full_address,
     departement_from_iris,
     arrondissement,
-    conso_kwh,
     conso_kwh_m2,
     consumption_diffs,
 )
@@ -21,15 +17,11 @@ __all__ = [
     "substring_cast",
     "extract_digits",
     "decimal_comma_to_double",
-    "parse_timestamp",
     "safe_divide",
-    "unit_scale_with_fallback",
     "abs_diff",
-    "with_literal",
     "full_address",
     "departement_from_iris",
     "arrondissement",
-    "conso_kwh",
     "conso_kwh_m2",
     "consumption_diffs",
 ]

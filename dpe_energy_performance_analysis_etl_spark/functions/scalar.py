@@ -7,13 +7,13 @@ Two layers:
     ``apply`` lambdas (U1, ``extract.py:348``, ``transform.py:156``)
     become vectorized JVM expressions here.
   - the reference's concrete derivations (`full_address`,
-    `arrondissement`, `conso_kwh`, ...) composed from the generic
+    `arrondissement`, `conso_kwh_m2`, ...) composed from the generic
     layer, so the judge can check parity per file:line.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 
 # ----------------------------------------------------------------- generic layer
@@ -42,13 +42,6 @@ def decimal_comma_to_double(col: str | Column) -> Column:
     return F.regexp_replace(c.cast("string"), ",", ".").try_cast("double")
 
 
-def parse_timestamp(col: str | Column) -> Column:
-    """F9 — coercing datetime parse; NULL on failure
-    (``pd.to_datetime(errors='coerce')``, ``transform.py:99``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.try_to_timestamp(c)
-
-
 def safe_divide(num: str | Column, den: str | Column) -> Column:
     """F6 — division with 0 divisor -> NULL (``transform.py:183-193``
     replaced 0 with NaN before dividing)."""
@@ -57,32 +50,11 @@ def safe_divide(num: str | Column, den: str | Column) -> Column:
     return n / F.nullif(d, F.lit(0))
 
 
-def unit_scale_with_fallback(
-    primary: str, fallback: str | None, factor: float, default=None
-) -> Column:
-    """F5 — scale ``primary`` by ``factor``; if NULL use ``fallback``;
-    if both missing use ``default`` (``compute_conso_kwh``,
-    ``transform.py:162-181`` fell back per-site when per-logement was
-    absent, else -1)."""
-    expr = F.col(primary) * factor
-    if fallback is not None:
-        expr = F.coalesce(expr, F.col(fallback) * factor)
-    if default is not None:
-        expr = F.coalesce(expr, F.lit(default))
-    return expr
-
-
 def abs_diff(a: str | Column, b: str | Column) -> Column:
     """F7 — absolute difference (``transform.py:195-213``)."""
     ca = F.col(a) if isinstance(a, str) else a
     cb = F.col(b) if isinstance(b, str) else b
     return F.abs(ca - cb)
-
-
-def with_literal(df: DataFrame, name: str, value) -> DataFrame:
-    """F11 — literal column assign, e.g. batch lineage stamp
-    (``extract.py:579``, ``transform.py:371``)."""
-    return df.withColumn(name, F.lit(value))
 
 
 # ------------------------------------------------- reference-domain derivations
@@ -106,15 +78,6 @@ def arrondissement(district: str) -> Column:
     empty result -> NULL, else int."""
     digits = extract_digits(district)
     return F.when(digits == "", None).otherwise(digits).try_cast("int")
-
-
-def conso_kwh(
-    per_logement_mwh: str = "consommation_annuelle_moyenne_par_logement_de_l_adresse_mwh_enedis",
-    per_site_mwh: str = "consommation_annuelle_moyenne_par_site_de_l_adresse_mwh_enedis",
-) -> Column:
-    """F5 instance — kWh from MWh with per-logement -> per-site
-    fallback, -1 when both absent (``transform.py:162-181``)."""
-    return unit_scale_with_fallback(per_logement_mwh, per_site_mwh, 1000.0, default=-1.0)
 
 
 def conso_kwh_m2(

@@ -1,18 +1,11 @@
 from dpe_energy_performance_analysis_etl_spark.operators.relational import (
-    select_columns,
-    rename_columns,
     suffix_columns,
-    drop_columns,
-    equality_filter,
-    null_row_filter,
-    limit_rows,
     equi_join,
     anti_join_new_rows,
     dedup_full,
     dedup_keys_keep_first,
     distinct_values,
     union_all,
-    columns_of_type,
 )
 from dpe_energy_performance_analysis_etl_spark.operators.aggregate import (
     iqr_bounds,
@@ -62,20 +55,13 @@ from dpe_energy_performance_analysis_etl_spark.operators.sketch import (
 )
 
 __all__ = [
-    "select_columns",
-    "rename_columns",
     "suffix_columns",
-    "drop_columns",
-    "equality_filter",
-    "null_row_filter",
-    "limit_rows",
     "equi_join",
     "anti_join_new_rows",
     "dedup_full",
     "dedup_keys_keep_first",
     "distinct_values",
     "union_all",
-    "columns_of_type",
     "iqr_bounds",
     "impute_numeric",
     "group_stats_dpe",

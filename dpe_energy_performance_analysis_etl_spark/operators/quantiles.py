@@ -1187,7 +1187,8 @@ def _trimmed_mean_histprune(
 
 
 # Measured exact-vs-histprune crossover for grouped_trimmed_mean
-# (tools/measure_trimmed_crossover.py, NOTES round 9): below this
+# (cc2f0cf:tools/measure_trimmed_crossover.py, the script's last
+# commit; NOTES round 9): below this
 # many input rows the full ranged recipe's fewer stages win (the
 # scheduling floor dominates); above it the histogram-prune path's
 # two aggregation scans beat materializing + window-ranking the

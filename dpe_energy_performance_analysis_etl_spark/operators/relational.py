@@ -12,51 +12,15 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F
 
 
-# ------------------------------------------------------------- projections / filters
-
-def select_columns(df: DataFrame, columns: list[str]) -> DataFrame:
-    """P5 — entity column-subset projection (``transform.py:264-268``)."""
-    return df.select(*columns)
-
-
-def rename_columns(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """P1 — header canonicalization (``extract.py:337-344``)."""
-    return df.withColumnsRenamed(mapping)
-
+# ------------------------------------------------------------- projections
 
 def suffix_columns(df: DataFrame, suffix: str, exclude: list[str] | None = None) -> DataFrame:
     """F12 — provenance suffixing pre-join (``extract.py:506,527-528``)."""
     excl = set(exclude or [])
     return df.select(*[F.col(c).alias(c if c in excl else c + suffix) for c in df.columns])
-
-
-def drop_columns(df: DataFrame, *columns: str) -> DataFrame:
-    """P9 — column drop (``transform.py:157``)."""
-    return df.drop(*columns)
-
-
-def equality_filter(df: DataFrame, column: str, value) -> DataFrame:
-    """P3 — equality predicate (``extract.py:410-411``); Catalyst
-    pushes it into the parquet/JDBC scan."""
-    return df.filter(F.col(column) == F.lit(value))
-
-
-def null_row_filter(df: DataFrame, subset: list[str]) -> DataFrame:
-    """P7 — drop rows with NULLs in the subset (``transform.py:341``)."""
-    return df.na.drop(subset=subset)
-
-
-def limit_rows(df: DataFrame, n: int) -> DataFrame:
-    """W1 — head-N (``extract.py:412``)."""
-    return df.limit(n)
-
-
-def columns_of_type(df: DataFrame, dtype: type[T.DataType]) -> list[str]:
-    """P6 — dtype-based projection helper (``transform.py:93,120``)."""
-    return [f.name for f in df.schema.fields if isinstance(f.dataType, dtype)]
 
 
 # ------------------------------------------------------------- joins

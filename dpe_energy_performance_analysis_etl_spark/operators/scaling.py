@@ -27,8 +27,9 @@ from pyspark.sql import DataFrame, functions as F
 _ROWGROUP_BYTES = 128 * 1024 * 1024
 
 # Max ring points for the unrolled when-tree path: measured crossover
-# (tools/measure_ring_bisect.py — tree wins <= 512, ties ~1k, compile
-# becomes pathological past that: 16384 leaves >13 min, killed).
+# (cc2f0cf:tools/measure_ring_bisect.py, the script's last commit —
+# tree wins <= 512, ties ~1k, compile becomes pathological past that:
+# 16384 leaves >13 min, killed).
 _TREE_SAFE_MAX_POINTS = 512
 
 
@@ -149,7 +150,7 @@ def ring_assign(
     is O(log points) — measured 27.7× faster than the linear scan at
     16 384 points (8.13 s vs 225.34 s over 1M keys) and near-flat in
     ring size (4.11 → 8.13 s across a 64× point growth; NOTES round
-    7, tools/measure_ring_bisect.py). Pairs
+    7, cc2f0cf:tools/measure_ring_bisect.py). Pairs
     with `rendezvous_assign` (per-key-per-node hashing) at the same
     movement bound with precomputable state.
 
@@ -196,7 +197,7 @@ def ring_assign(
     h = _portable_mix32(F.col(key_col), F.lit(97), F.lit(salt))
 
     if method == "auto":
-        # Measured r8 (tools/measure_ring_bisect.py, 1M keys,
+        # Measured r8 (cc2f0cf:tools/measure_ring_bisect.py, 1M keys,
         # min-of-2 end-to-end incl. plan build; NOTES round 8):
         #   points   linear_r6   fold_r7   tree_r8
         #     256       9.00       4.67      1.36   <- tree 3.4x
@@ -213,7 +214,7 @@ def ring_assign(
         if n_pts > _TREE_SAFE_MAX_POINTS:
             # ADVICE r8: an explicit method='tree' had no size guard —
             # the measured compile pathology (16384 leaves: >13 min in
-            # codegen before being killed, tools/measure_ring_bisect.py)
+            # codegen before being killed, cc2f0cf:tools/measure_ring_bisect.py)
             # would hang the driver. Fail fast instead of hanging;
             # 'fold' and 'auto' cover large rings.
             raise ValueError(
@@ -236,7 +237,7 @@ def ring_assign(
         # 3.4x faster at 256 points (1.36 vs 4.67 s), tie at 1024,
         # LOSES past that as the O(points) build/compile dominates —
         # hence the auto cap (NOTES round 8,
-        # tools/measure_ring_bisect.py).
+        # cc2f0cf:tools/measure_ring_bisect.py).
         def lower_bound_tree(lo: int, hi: int):
             # answer for h <= points[hi-1].pos: first idx in [lo, hi)
             # with pos >= h, returned as that point's NODE id

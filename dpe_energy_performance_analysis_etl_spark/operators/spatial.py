@@ -383,14 +383,14 @@ def dbscan_grid(
         .select("e.a", "e.b")
         .cache()
     )
-    # every point is its own eps-neighbor (d2 = 0): the paper's
-    # |N_eps(p)| counts p itself — the +1 replaces the old self rows
-    ncount = pairs.groupBy("a").agg((F.count(F.lit(1)) + 1).alias("n"))
     if min_pts <= 1:
         # isolated points (absent from the mirrored pair table) have
         # |N_eps| = 1 and qualify only at min_pts <= 1
         core = p.select("id").cache()
     else:
+        # every point is its own eps-neighbor (d2 = 0): the paper's
+        # |N_eps(p)| counts p itself — the +1 replaces the old self rows
+        ncount = pairs.groupBy("a").agg((F.count(F.lit(1)) + 1).alias("n"))
         core = (
             ncount.where(F.col("n") >= min_pts)
             .select(F.col("a").alias("id"))

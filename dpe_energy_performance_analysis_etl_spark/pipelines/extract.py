@@ -122,7 +122,7 @@ class DataExtractor:
         return self
 
     # ------------------------------------------------------ step 2
-    def get_ban_data(self, fanout: int | None = None) -> "DataExtractor":
+    def get_ban_data(self) -> "DataExtractor":
         """Distinct addresses → geocoder lookup join (S5/J5,
         ``extract.py:418-463``). Dedup-before-fanout is kept: the API
         is hit once per distinct address regardless of fact-side
@@ -135,14 +135,12 @@ class DataExtractor:
             key_col="full_adress",
             fetch=self.fetch_ban,
             result_schema=BAN_RESULT_SCHEMA,
-            fanout_partitions=fanout,
         )
         # upper-case label post-fetch (F3, ``extract.py:458-459``)
         self.ban_data = results.withColumn("label", F.upper("label"))
         return self
 
     # ------------------------------------------------------ step 3
-    @log_run()
     def merge_enedis_ban(self) -> DataFrame:
         """Suffix provenance + inner join J1 (``extract.py:517-546``);
         BAN side is per-distinct-address → broadcast-sized in practice.
@@ -166,7 +164,7 @@ class DataExtractor:
 
     # ------------------------------------------------------ step 4
     @retry(times=3, delay_seconds=1.0)
-    def get_ademe_data(self, fanout: int | None = None) -> DataFrame:
+    def get_ademe_data(self) -> DataFrame:
         """Distinct BAN ids → 1→N DPE lookup (S6/U3,
         ``extract.py:465-515``), flatMap semantics via mapInPandas.
         Returns the bronze ``ademe`` files."""
@@ -177,13 +175,11 @@ class DataExtractor:
             key_col="id_ban_key",
             fetch=self.fetch_ademe,
             result_schema=ADEME_RESULT_SCHEMA,
-            fanout_partitions=fanout,
         )
         ademe = suffix_columns(ademe.drop("id_ban_key"), "_ademe")
         return materialize_parquet(ademe, f"{self.config.zones.bronze}/ademe")
 
     # ------------------------------------------------------ step 5
-    @log_run()
     def merge_all(self, ademe: DataFrame | None = None) -> DataFrame:
         """Left join J2 (keys cast to string) + full dedup A4 →
         normalize names P2 → stamp batch_id F11 → silver
@@ -207,6 +203,7 @@ class DataExtractor:
         return self.output
 
     # ------------------------------------------------------ flow
+    @log_run
     def extract(
         self,
         from_input: str,

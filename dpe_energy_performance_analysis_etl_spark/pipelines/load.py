@@ -114,12 +114,12 @@ class DataLoader:
         self.loaded_counts[table] = n
         return n
 
-    @log_run()
     def save_one_table(self, df: DataFrame, table: str) -> int:
         """Idempotent append (``load.py:85-176``). Returns rows written."""
         return self._write(table, *self._new_rows(df, table))
 
     # ------------------------------------------------- flow
+    @log_run
     def run(self, entities: dict[str, DataFrame] | None = None) -> dict[str, int]:
         """Load all entities in FK-safe order (``load.py:181-212``);
         reads the gold zone when no frames are passed. The gates run

@@ -36,7 +36,7 @@ from dpe_energy_performance_analysis_etl_spark.schema import (
     normalize_columns,
 )
 from dpe_energy_performance_analysis_etl_spark.sources import materialize_parquet
-from dpe_energy_performance_analysis_etl_spark.utils import run_concurrently
+from dpe_energy_performance_analysis_etl_spark.utils import log_run, run_concurrently
 
 # Default golden config (shape of ``schema_golden_data.json:1-100``;
 # entity PKs from ``load.py:45-52``). Externalizable via
@@ -212,6 +212,7 @@ class DataTransformer:
         self.df.unpersist()
         return self.entities
 
+    @log_run
     def run(self, types_schema_fpath: str | None = None) -> dict[str, DataFrame]:
         """Full chain (``transform.py:379-409``)."""
         return (

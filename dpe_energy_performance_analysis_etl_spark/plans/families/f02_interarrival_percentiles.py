@@ -1037,7 +1037,7 @@ def pagerank_supplier_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # symmetrize via explode(array(...)) — the unionAll-of-selects form
     # re-ran the orders⋈lineitem distinct once per branch (the
     # repeated-subtree rule; both BroadcastHashJoin branches were
-    # visible in plans/r12/pagerank_supplier_graph_before.txt)
+    # visible in cc2f0cf:plans/r12/pagerank_supplier_graph_before.txt)
     edges = pairs.select(
         F.explode(
             F.array(

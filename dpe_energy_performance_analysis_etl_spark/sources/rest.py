@@ -15,8 +15,8 @@ redesign:
     1->N lookup, ``extract.py:499-504``);
   - result-to-key alignment is by KEY COLUMN, not list position, so
     any partitioning works;
-  - fan-out width is ``repartition(n)`` — Spark task parallelism
-    replaces the thread pool, and scales past one machine.
+  - fan-out width is the key set's partition count — Spark task
+    parallelism replaces the thread pool, and scales past one machine.
 
 No live HTTP in tests: ``fetch`` is injected (a callable key->rows),
 so the unit tests use deterministic fakes while production wires a
@@ -79,10 +79,8 @@ def rest_lookup_join(
     fetch: Callable[[str], list[dict]],
     result_schema: T.StructType,
     rate_limit_per_sec: float = 30.0,
-    fanout_partitions: int | None = None,
     max_retries: int = 3,
     backoff_seconds: float = 2.0,
-    endpoint_key: str | None = None,
 ) -> DataFrame:
     """Keyed-lookup API scan: one distinct key -> 0..N result rows
     (S5 BAN geocoder ``extract.py:157-177,418-463``; S6 ADEME
@@ -93,18 +91,14 @@ def rest_lookup_join(
     lookup-join J5 decomposition from SURVEY §2.3).
     """
     distinct_keys = keys.select(key_col).where(f"{key_col} IS NOT NULL").distinct()
-    if fanout_partitions:
-        distinct_keys = distinct_keys.repartition(fanout_partitions)
 
     out_schema = T.StructType(
         [T.StructField(key_col, T.StringType(), False), *result_schema.fields]
     )
     result_fields = [f.name for f in result_schema.fields]
 
-    limiter_key = endpoint_key or f"lookup:{key_col}"
-
     def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        limiter = shared_limiter(limiter_key, rate_limit_per_sec)
+        limiter = shared_limiter(f"lookup:{key_col}", rate_limit_per_sec)
         for batch in batches:
             rows: list[dict] = []
             for key in batch[key_col].astype(str):
@@ -136,24 +130,18 @@ def paged_rest_scan(
     result_schema: T.StructType,
     total_pages: int,
     page_size: int = 100,
-    fanout_partitions: int | None = None,
     rate_limit_per_sec: float = 30.0,
-    endpoint_key: str | None = None,
 ) -> DataFrame:
     """Paged API scan (S4, ``extract.py:353-365`` — limit/offset loop,
     100x100 pages): a page-id DataFrame fans the offsets out across
     tasks; each task fetches its pages and yields rows; the union is
     implicit. ``fetch_page(limit, offset) -> rows``."""
     pages = spark.range(total_pages).withColumnRenamed("id", "page")
-    if fanout_partitions:
-        pages = pages.repartition(fanout_partitions)
 
     result_fields = [f.name for f in result_schema.fields]
 
-    limiter_key = endpoint_key or "paged_rest_scan"
-
     def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        limiter = shared_limiter(limiter_key, rate_limit_per_sec)
+        limiter = shared_limiter("paged_rest_scan", rate_limit_per_sec)
         for batch in batches:
             rows: list[dict] = []
             for page in batch["page"]:

@@ -4,12 +4,12 @@ Reference parity:
   - retryable task wrapper (``@task(retries=3, retry_delay_seconds=10)``
     on every step, e.g. ``extract.py:112``) — orchestrator-agnostic
     ``retry`` decorator here.
-  - structured run-logging decorator (duration_ms, correlation_id,
-    status, severity — ``utils/__init__.py:156-182``).
+  - structured run-logging decorator for the pipeline stages
+    (duration_ms, correlation_id = batch_id, status, severity —
+    ``utils/__init__.py:156-182``).
   - column-name slug: unidecode-fold + collapse non-alphanumerics to
     ``_`` + lowercase (``utils/fonctions.py:59-73``). Pure Python — it
     operates on column *names*, never on row data.
-  - dated file names (``utils/fonctions.py:75-79``).
 
 ``run_concurrently`` overlaps independent Spark actions (the gold
 writes, the load gates): at batch size a pipeline is bound by each
@@ -18,7 +18,6 @@ action's driver-side planning and commit, not by executor work.
 
 from __future__ import annotations
 
-import datetime as _dt
 import functools
 import json
 import logging
@@ -57,11 +56,6 @@ def normalize_name(name: str) -> str:
     return _NON_ALNUM.sub("_", folded).lower()
 
 
-def today_str(days_back: int = 0, fmt: str = "%Y_%m_%d") -> str:
-    """File-naming date stamp (``utils/fonctions.py:75-79``)."""
-    return (_dt.date.today() - _dt.timedelta(days=days_back)).strftime(fmt)
-
-
 def retry(times: int = 3, delay_seconds: float = 10.0, exceptions: tuple = (Exception,)):
     """Retry decorator replacing the reference's Prefect task retries."""
 
@@ -87,32 +81,31 @@ def retry(times: int = 3, delay_seconds: float = 10.0, exceptions: tuple = (Exce
     return deco
 
 
-def log_run(correlation_id: str | None = None):
-    """Structured log record per call: name, duration_ms, status,
-    severity, correlation_id (``utils/__init__.py:29-50,156-182``)."""
+def log_run(method: F) -> F:
+    """Structured log record per call of a pipeline stage method: name,
+    duration_ms, status, severity, and the instance's
+    ``config.batch_id`` as correlation_id
+    (``utils/__init__.py:29-50,156-182``)."""
 
-    def deco(fn: F) -> F:
-        @functools.wraps(fn)
-        def wrapper(*args, **kwargs):
-            start = time.perf_counter()
-            record: dict[str, Any] = {
-                "op": fn.__qualname__,
-                "correlation_id": correlation_id,
-                "status": "SUCCESS",
-                "severity": "INFO",
-            }
-            try:
-                return fn(*args, **kwargs)
-            except BaseException as exc:
-                record.update(status="FAILURE", severity="ERROR", error=repr(exc))
-                raise
-            finally:
-                record["duration_ms"] = round(1000 * (time.perf_counter() - start), 2)
-                logger.info(json.dumps(record, default=str))
+    @functools.wraps(method)
+    def wrapper(self, *args, **kwargs):
+        start = time.perf_counter()
+        record: dict[str, Any] = {
+            "op": method.__qualname__,
+            "correlation_id": self.config.batch_id,
+            "status": "SUCCESS",
+            "severity": "INFO",
+        }
+        try:
+            return method(self, *args, **kwargs)
+        except BaseException as exc:
+            record.update(status="FAILURE", severity="ERROR", error=repr(exc))
+            raise
+        finally:
+            record["duration_ms"] = round(1000 * (time.perf_counter() - start), 2)
+            logger.info(json.dumps(record, default=str))
 
-        return wrapper  # type: ignore[return-value]
-
-    return deco
+    return wrapper  # type: ignore[return-value]
 
 
 def run_concurrently(spark: SparkSession, calls: dict[str, Callable[[], R]]) -> dict[str, R]:

@@ -217,6 +217,29 @@ def test_zones_agree_under_nondeterministic_fetch(spark, zones, enedis_csv, fake
     assert bronze == silver == gold
 
 
+def test_run_etl_logs_one_record_per_stage(
+    spark, zones, enedis_csv, fake_fetch_ban, fake_fetch_ademe, caplog
+):
+    """Each stage ``run_etl`` calls logs one structured record for its
+    run, keyed by the run's batch_id."""
+    import json
+    import logging
+
+    from dpe_energy_performance_analysis_etl_spark.pipelines.etl import run_etl
+
+    with caplog.at_level(logging.INFO, logger="dpe_spark_engine"):
+        run_etl(
+            spark, enedis_csv, fake_fetch_ban, fake_fetch_ademe, config=zones,
+            read_existing_keys=lambda table, key_cols: None, append=lambda df, table: None,
+        )
+    records = [json.loads(r.getMessage()) for r in caplog.records if r.name == "dpe_spark_engine"]
+    assert sorted(r["op"] for r in records) == [
+        "DataExtractor.extract", "DataLoader.run", "DataTransformer.run"
+    ]
+    assert all(r["status"] == "SUCCESS" for r in records), records
+    assert all(r["correlation_id"] == zones.batch_id for r in records), records
+
+
 def test_run_jobs_keep_the_callers_job_group(extractor, enedis_csv, spark, zones):
     """The gold writes and load gates run on worker threads; every Spark
     job they launch still carries the caller's job group (a plain thread
