@@ -2,6 +2,7 @@ from dpe_energy_performance_analysis_etl_spark.operators.relational import (
     suffix_columns,
     equi_join,
     anti_join_new_rows,
+    key_bounds,
     dedup_full,
     dedup_keys_keep_first,
     distinct_values,
@@ -58,6 +59,7 @@ __all__ = [
     "suffix_columns",
     "equi_join",
     "anti_join_new_rows",
+    "key_bounds",
     "dedup_full",
     "dedup_keys_keep_first",
     "distinct_values",

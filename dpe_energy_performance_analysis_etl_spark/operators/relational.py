@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 
 # ------------------------------------------------------------- projections
@@ -60,25 +60,91 @@ def equi_join(
     return left.join(right, on=cond, how=how)
 
 
-def anti_join_new_rows(batch: DataFrame, existing: DataFrame, key_cols: list[str]) -> DataFrame:
-    """J3/J4 — idempotent-append filter: keep only batch rows whose
-    key is NOT already present (single-key ``isin`` variant
-    ``load.py:139-149``; composite merge+indicator variant
-    ``load.py:150-160`` — one left_anti covers both).
+def key_bounds(batch: DataFrame, key_cols: list[str]) -> dict[str, tuple]:
+    """Per-key-column (min, max, has_null) of a batch — one small
+    aggregate job (a single driver row, batch-scoped)."""
+    aggs = []
+    for k in key_cols:
+        aggs += [
+            F.min(k).alias(f"__min_{k}"),
+            F.max(k).alias(f"__max_{k}"),
+            F.max(F.col(k).isNull().cast("int")).alias(f"__null_{k}"),
+        ]
+    row = batch.agg(*aggs).collect()[0]
+    return {
+        k: (row[f"__min_{k}"], row[f"__max_{k}"], bool(row[f"__null_{k}"] or 0))
+        for k in key_cols
+    }
 
-    ``existing`` is first reduced to the keys this batch holds (a
-    left_semi join against the batch's keys), then the batch is
-    left_anti-joined against that remainder. The join inputs are
-    bounded by the batch, not by the history, so memory does not grow
-    with the sink; AQE picks both join strategies. ``existing`` should
-    already be pruned to the key columns (see
-    ``read_jdbc_table(columns=key_cols)``). ``batch`` is read twice, so
-    pass a materialized frame (a file scan), not a costly lineage.
-    """
-    present = existing.select(*key_cols).join(
-        batch.select(*key_cols), on=key_cols, how="left_semi"
+
+# key types that Spark, parquet statistics and SQL databases all order
+# the same way, so a pushed range filter is exact
+_RANGED_TYPES = (T.NumericType, T.DateType, T.TimestampType, T.TimestampNTZType)
+
+
+def _within_bounds(bounds: dict[str, tuple]):
+    """``k BETWEEN lo AND hi`` (``OR k IS NULL`` when the batch has a
+    null key) per key column, conjoined; false for an empty batch."""
+    preds = []
+    for k, (lo, hi, has_null) in bounds.items():
+        p = F.col(k).between(F.lit(lo), F.lit(hi)) if lo is not None else F.lit(False)
+        preds.append(p | F.col(k).isNull() if has_null else p)
+    return functools.reduce(lambda a, b: a & b, preds)
+
+
+def _null_safe_join(left: DataFrame, right: DataFrame, key_cols: list[str], how: str) -> DataFrame:
+    """``left`` semi/anti-joined to ``right`` on ``key_cols`` with
+    ``<=>``: a null key matches a null key, as in ``dropDuplicates``."""
+    right = right.select(*[F.col(k).alias(f"__r_{k}") for k in key_cols])
+    cond = functools.reduce(
+        lambda a, b: a & b, [left[k].eqNullSafe(right[f"__r_{k}"]) for k in key_cols]
     )
-    return batch.join(present, on=key_cols, how="left_anti")
+    return left.join(right, on=cond, how=how)
+
+
+def anti_join_new_rows(
+    batch: DataFrame, existing: DataFrame | None, key_cols: list[str]
+) -> DataFrame:
+    """J3/J4 — the idempotent-append gate (``load.py:133-210``): the
+    rows of ``batch`` to append to a sink whose keys are ``existing``
+    (``None`` when the sink has no such table yet). The ETL loader and
+    both streaming loaders go through it.
+
+    1. One row per key (``load.py:188-210``): the row minimal over all
+       of the batch's columns, so the same rows in any order keep the
+       same row.
+    2. ``existing`` is filtered to the batch's range on its numeric,
+       date and timestamp key columns (``key_bounds``, one small eager
+       job). The filter is a plain DataFrame predicate, so Spark pushes
+       it into the sink's scan: parquet row-group skipping, a ``WHERE``
+       on a JDBC read. String keys get no range: a database compares
+       them under its collation, not Spark's byte order, so a pushed
+       string range can drop keys the sink holds (and Derby cannot
+       compare the CLOB columns Spark creates for them). The ETL
+       loader's keys are strings, so it runs no bounds job.
+    3. ``existing`` is semi-joined to the batch's keys, then the
+       deduplicated batch is anti-joined to that remainder (one
+       left_anti covers the single-key ``isin`` variant,
+       ``load.py:139-149``, and the composite merge+indicator one,
+       ``load.py:150-160``). Both joins compare keys null-safely, so a
+       null-key row already in the sink is not appended again. Their
+       inputs are bounded by the batch, not the history; AQE picks
+       both strategies.
+
+    ``existing`` should already be pruned to the key columns (the
+    sinks' ``read_existing_keys`` do). ``batch`` is read up to three times,
+    so pass a materialized frame (a file scan, a persisted
+    micro-batch), not a costly lineage.
+    """
+    new_rows = dedup_keys_keep_first(batch, key_cols, order_by=batch.columns)
+    if existing is None:
+        return new_rows
+    existing = existing.select(*key_cols)
+    ranged = [k for k in key_cols if isinstance(batch.schema[k].dataType, _RANGED_TYPES)]
+    if ranged:
+        existing = existing.where(_within_bounds(key_bounds(batch, ranged)))
+    present = _null_safe_join(existing, batch.select(*key_cols), key_cols, "left_semi")
+    return _null_safe_join(new_rows, present, key_cols, "left_anti")
 
 
 # ------------------------------------------------------------- dedup / distinct

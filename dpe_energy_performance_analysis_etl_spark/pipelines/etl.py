@@ -26,6 +26,7 @@ from dpe_energy_performance_analysis_etl_spark.config import EngineConfig
 from dpe_energy_performance_analysis_etl_spark.pipelines.extract import DataExtractor
 from dpe_energy_performance_analysis_etl_spark.pipelines.load import DataLoader
 from dpe_energy_performance_analysis_etl_spark.pipelines.transform import DataTransformer
+from dpe_energy_performance_analysis_etl_spark.sources import parquet_sink
 
 
 def run_etl(
@@ -149,27 +150,6 @@ def http_fetchers(
         return list(r.json().get("results", []))
 
     return fetch_ban, fetch_ademe
-
-
-def parquet_sink(spark: SparkSession, root: str):
-    """(read_existing_keys, append) writing gold entity tables as
-    parquet under ``root`` — a database-free sink with the same
-    anti-join idempotence contract as the JDBC one, used by the CLI
-    when no ENGINE_JDBC_URL is configured."""
-    from dpe_energy_performance_analysis_etl_spark.sources import read_parquet, write_parquet
-    from dpe_energy_performance_analysis_etl_spark.streaming.incremental import _dir_has_data
-
-    def read_existing(table: str, key_cols: list[str]) -> DataFrame | None:
-        # explicit existence probe — a transient read failure must
-        # raise, not silently read as "first run" and duplicate rows
-        if not _dir_has_data(spark, f"{root}/{table}"):
-            return None
-        return read_parquet(spark, f"{root}/{table}").select(*key_cols)
-
-    def append(df: DataFrame, table: str) -> None:
-        write_parquet(df, f"{root}/{table}", mode="append")
-
-    return read_existing, append
 
 
 def main(argv: list[str] | None = None) -> dict[str, int]:

@@ -5,9 +5,10 @@ into a relational sink, in FK-safe order.
 Per table (``save_one_table``, ``load.py:85-176``): PK cast to string
 → read EXISTING KEY COLUMNS ONLY from the sink (the reference pulled
 the whole table into pandas, ``load.py:127-131`` — at scale that's the
-difference between reading a key index and reading terabytes) →
-left_anti join J3/J4 against the existing keys that match the batch →
-skip-if-empty gate → append S12.
+difference between reading a key index and reading terabytes) → the
+idempotent-append gate ``operators.anti_join_new_rows`` (one row per
+key, null-safe left_anti J3/J4 against the existing keys the batch
+holds) → skip-if-empty gate → append S12.
 
 ``run`` overlaps the tables' gates: it computes every table's new-row
 frame and count at the same time, one thread per table, then appends
@@ -15,10 +16,11 @@ one table at a time in ``LOAD_ORDER``, so the sink's foreign keys are
 satisfied in the same order as before. A gate that raises stops the
 run before any append.
 
-The sink is injected as (read_existing_keys, append) callables;
-production wires ``sources.read_jdbc_table`` / ``append_jdbc_table``,
-tests wire an in-memory dict of DataFrames. No live database needed
-for correctness coverage.
+The sink is injected as (read_existing_keys, append) callables, by
+default ``sources.jdbc_sink`` over the configured ENGINE_JDBC_URL;
+``sources.parquet_sink`` is the database-free one, and tests wire an
+in-memory dict of DataFrames. No live database needed for
+correctness coverage.
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from dpe_energy_performance_analysis_etl_spark.config import EngineConfig
 from dpe_energy_performance_analysis_etl_spark.operators import anti_join_new_rows
 from dpe_energy_performance_analysis_etl_spark.pipelines.transform import ENTITY_PKS, LOAD_ORDER
-from dpe_energy_performance_analysis_etl_spark.sources import append_jdbc_table, read_jdbc_table
+from dpe_energy_performance_analysis_etl_spark.sources import jdbc_sink
 from dpe_energy_performance_analysis_etl_spark.utils import log_run, run_concurrently
 
 
@@ -42,75 +44,29 @@ class DataLoader:
         config: EngineConfig | None = None,
         read_existing_keys: Callable[[str, list[str]], DataFrame | None] | None = None,
         append: Callable[[DataFrame, str], None] | None = None,
-        strategy: str = "append",
-        upsert: Callable[[DataFrame, str, list[str]], None] | None = None,
     ):
-        """``strategy="append"`` reproduces the reference exactly:
-        read existing keys, anti-join, append the complement
-        (existing rows are never modified). ``strategy="upsert"``
-        uses the dialect layer's staging-table MERGE instead — one
-        server round trip, no key read, and changed rows UPDATE in
-        place (requires a PK on the target for Postgres)."""
-        if strategy not in ("append", "upsert"):
-            raise ValueError(f"unknown load strategy: {strategy}")
         self.spark = spark
         self.config = config or EngineConfig()
-        self.strategy = strategy
-        self._read_existing = read_existing_keys or self._jdbc_read_keys
-        self._append = append or self._jdbc_append
-        self._upsert = upsert or self._jdbc_upsert
-        self.loaded_counts: dict[str, int] = {}
-
-    # ------------------------------------------------- default JDBC sink
-    def _jdbc_read_keys(self, table: str, key_cols: list[str]) -> DataFrame | None:
-        cfg = self.config
-        assert cfg.jdbc_url, "ENGINE_JDBC_URL not configured"
-        # explicit metadata probe: a transient connectivity failure
-        # must raise (run retries), not read as "table absent" — that
-        # would skip the anti-join and append duplicates
-        from dpe_energy_performance_analysis_etl_spark.sources import jdbc_table_exists
-
-        if not jdbc_table_exists(self.spark, cfg.jdbc_url, table, cfg.jdbc_properties):
-            return None  # table absent yet → everything is new
-        return read_jdbc_table(
-            self.spark, cfg.jdbc_url, table, cfg.jdbc_properties, columns=key_cols
+        default_read, default_append = jdbc_sink(
+            spark, self.config.jdbc_url, self.config.jdbc_properties
         )
-
-    def _jdbc_append(self, df: DataFrame, table: str) -> None:
-        cfg = self.config
-        assert cfg.jdbc_url, "ENGINE_JDBC_URL not configured"
-        append_jdbc_table(df, cfg.jdbc_url, table, cfg.jdbc_properties)
-
-    def _jdbc_upsert(self, df: DataFrame, table: str, pk: list[str]) -> None:
-        from dpe_energy_performance_analysis_etl_spark.sources import upsert_jdbc_table
-
-        cfg = self.config
-        assert cfg.jdbc_url, "ENGINE_JDBC_URL not configured"
-        upsert_jdbc_table(df, cfg.jdbc_url, table, pk, cfg.jdbc_properties)
+        self._read_existing = read_existing_keys or default_read
+        self._append = append or default_append
+        self.loaded_counts: dict[str, int] = {}
 
     # ------------------------------------------------- per-table
     def _new_rows(self, df: DataFrame, table: str) -> tuple[DataFrame, int]:
         """The rows of ``df`` to write to ``table`` and their count: PK
-        cast to string (``load.py:110-120``), existing keys removed
-        (append strategy only), deterministic keep-first on PK within
-        the batch (``load.py:188-210``)."""
+        cast to string (``load.py:110-120``), then the gate."""
         pk = ENTITY_PKS[table]
         df = df.withColumns({k: F.col(k).cast("string") for k in pk})
-        if self.strategy == "append":
-            existing = self._read_existing(table, pk)
-            if existing is not None:
-                df = anti_join_new_rows(df, existing, pk)
-        df = df.dropDuplicates(pk)
+        df = anti_join_new_rows(df, self._read_existing(table, pk), pk)
         return df, df.count()
 
     def _write(self, table: str, df: DataFrame, n: int) -> int:
-        """Skip-if-empty gate (``load.py:163-165``), then append or
-        upsert."""
+        """Skip-if-empty gate (``load.py:163-165``), then append."""
         if n:
-            if self.strategy == "upsert":
-                self._upsert(df, table, ENTITY_PKS[table])
-            else:
-                self._append(df, table)
+            self._append(df, table)
         self.loaded_counts[table] = n
         return n
 

@@ -287,14 +287,12 @@ def join_anti_new_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3/J4 — left anti-join (idempotent-append key filter,
     ``load.py:133-160``): customers with no completed ('F') orders —
     the complement set the idempotent loader would append."""
-    from dpe_energy_performance_analysis_etl_spark.operators import anti_join_new_rows
-
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     existing = orders.filter(F.col("o_orderstatus") == "F").select(
         F.col("o_custkey").alias("c_custkey")
     )
-    return anti_join_new_rows(cust, existing, ["c_custkey"]).select("c_custkey", "c_name")
+    return cust.join(existing, "c_custkey", "left_anti").select("c_custkey", "c_name")
 
 
 @register(

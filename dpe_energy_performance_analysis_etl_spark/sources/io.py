@@ -11,7 +11,14 @@ Scale notes baked in:
     ``filestorage_helper.py:99``; snappy/zstd better at scale);
   - JDBC reads prune to the needed columns and can parallelize via
     ``partitionColumn`` — the reference read whole tables single-
-    threaded (``load.py:127-131``).
+    threaded (``load.py:127-131``). Filters on the result push into
+    the query too: for numeric, date and timestamp keys the
+    idempotent-append gate ``operators.anti_join_new_rows`` reads only
+    the batch's key range from the sink (``sources/sinks.py``).
+
+ORC, text and XML files need no wrapper here: call Spark's built-in
+readers and writers (``spark.read.orc`` / ``.text`` /
+``.format("xml")``) directly.
 """
 
 from __future__ import annotations
@@ -323,69 +330,3 @@ def compact_parquet_dir(
         "total_bytes": after["total_bytes"],
         "skipped": False,
     }
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same pushdown/pruning properties as parquet (both
-    columnar with min/max stats; Catalyst pushes predicates and prunes
-    columns identically). Here for source-format completeness: a user
-    switching from an engine with ORC inputs keeps their files."""
-    return spark.read.orc(path)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    compression: str = "zlib",
-    partition_by: list[str] | None = None,
-) -> None:
-    """ORC sink with codec + partitioning knobs (mirrors
-    ``write_parquet``)."""
-    writer = df.write.mode(mode).option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Raw text scan: one row per line, single ``value`` column — the
-    ingest shape for log files and line-delimited corpora before any
-    parsing. Splittable like any text source; pair with
-    ``text/curation.py`` cleaning for raw-crawl pipelines."""
-    return spark.read.text(path)
-
-
-def read_xml(
-    spark: SparkSession,
-    path: str,
-    row_tag: str = "row",
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """XML scan (Spark 4 built-in source, the former spark-xml
-    package): one row per ``row_tag`` element, attributes as ``_attr``
-    columns. Schema inference runs a full extra pass — pass ``schema``
-    in production exactly as with CSV/JSON. Source-format
-    completeness: the common shape for legacy enterprise feeds."""
-    reader = spark.read.format("xml").option("rowTag", row_tag)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)
-
-
-def write_xml(
-    df: DataFrame,
-    path: str,
-    row_tag: str = "row",
-    root_tag: str = "rows",
-    mode: str = "overwrite",
-) -> None:
-    """XML sink (one file per partition, ``root_tag`` wrapping
-    ``row_tag`` elements)."""
-    (
-        df.write.mode(mode)
-        .format("xml")
-        .option("rowTag", row_tag)
-        .option("rootTag", root_tag)
-        .save(path)
-    )

@@ -14,10 +14,8 @@ from dpe_energy_performance_analysis_etl_spark.streaming.incremental import (
     enrich_stream_static,
     versioned_merge_stream,
     cdc_apply_stream,
-    key_bounds,
-    pruned_existing_keys,
-    bounds_predicate_sql,
 )
+from dpe_energy_performance_analysis_etl_spark.operators.relational import key_bounds
 from dpe_energy_performance_analysis_etl_spark.streaming.stateful import (
     sessionize_stream,
     batch_closed_sessions,
@@ -40,8 +38,6 @@ __all__ = [
     "versioned_merge_stream",
     "cdc_apply_stream",
     "key_bounds",
-    "pruned_existing_keys",
-    "bounds_predicate_sql",
     "sessionize_stream",
     "batch_closed_sessions",
 ]

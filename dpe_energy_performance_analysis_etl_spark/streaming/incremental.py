@@ -7,7 +7,8 @@ cron batches with batch_id lineage and idempotent anti-join appends
   - ``incremental_append_stream``: a file stream over a landing
     (bronze) directory with ``Trigger.AvailableNow`` — processes
     whatever has arrived, exactly once (checkpointed offsets), runs
-    the same anti-join-append semantics per micro-batch via
+    the ETL loader's idempotent-append gate
+    (``operators.anti_join_new_rows``) per micro-batch via
     ``foreachBatch``, then stops. Scheduled-batch semantics identical
     to the reference's cron flow, plus recovery the reference lacks.
   - ``windowed_event_counts``: event-time tumbling window aggregation
@@ -17,87 +18,8 @@ cron batches with batch_id lineage and idempotent anti-join appends
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming import StreamingQuery
-
-
-def _dir_has_data(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` exists and contains at least one data file.
-
-    Explicit existence probe (Hadoop FS, so local/s3a/hdfs uniformly)
-    instead of read-and-catch: a transient read failure must FAIL the
-    micro-batch (the checkpoint retries it), not silently disable the
-    idempotence anti-join and duplicate rows."""
-    jvm, fs, hpath = _state_fs(spark, path)
-    if not fs.exists(hpath):
-        return False
-    it = fs.listFiles(hpath, True)
-    while it.hasNext():
-        name = it.next().getPath().getName()
-        if not (name.startswith("_") or name.startswith(".")):
-            return True
-    return False
-
-
-def key_bounds(batch: DataFrame, key_cols: list[str]) -> dict[str, tuple]:
-    """Per-key-column (min, max, has_null) of a micro-batch — one
-    small aggregate job (a single driver row, batch-scoped)."""
-    aggs = []
-    for k in key_cols:
-        aggs += [
-            F.min(k).alias(f"__min_{k}"),
-            F.max(k).alias(f"__max_{k}"),
-            F.max(F.col(k).isNull().cast("int")).alias(f"__null_{k}"),
-        ]
-    row = batch.agg(*aggs).collect()[0]
-    return {
-        k: (row[f"__min_{k}"], row[f"__max_{k}"], bool(row[f"__null_{k}"] or 0))
-        for k in key_cols
-    }
-
-
-def pruned_existing_keys(
-    spark: SparkSession,
-    target_dir: str,
-    key_cols: list[str],
-    bounds: dict[str, tuple],
-) -> DataFrame:
-    """Existing-keys read for the idempotence anti-join, pruned to the
-    micro-batch's key range: ``key BETWEEN batch_min AND batch_max``
-    (plus ``IS NULL`` only if the batch carries null keys) pushes into
-    the parquet scan as min/max row-group skipping — the existing side
-    scans O(overlapping row groups), not the whole 100 TB target, per
-    batch. Keys outside the batch's range can't anti-join anything, so
-    the prune is exact."""
-    existing = spark.read.parquet(target_dir).select(*key_cols)
-    preds = []
-    for k in key_cols:
-        lo, hi, has_null = bounds[k]
-        p = None
-        if lo is not None:
-            p = F.col(k).between(F.lit(lo), F.lit(hi))
-        if has_null:
-            null_p = F.col(k).isNull()
-            p = null_p if p is None else (p | null_p)
-        preds.append(p if p is not None else F.lit(False))
-    return existing.where(reduce(lambda a, b: a & b, preds))
-
-
-def _anti_join_keys(batch: DataFrame, existing: DataFrame, key_cols: list[str]) -> DataFrame:
-    """left_anti of ``batch`` against ``existing`` with NULL-SAFE key
-    equality: ``dropDuplicates`` treats null keys as equal, so the
-    cross-batch dedup must too (plain ``=`` never matches NULL and a
-    redelivered null-key row would duplicate)."""
-    existing_k = existing.dropDuplicates(key_cols).select(
-        *[F.col(k).alias(f"__e_{k}") for k in key_cols]
-    )
-    cond = reduce(
-        lambda a, b: a & b,
-        [batch[k].eqNullSafe(existing_k[f"__e_{k}"]) for k in key_cols],
-    )
-    return batch.join(existing_k, on=cond, how="left_anti")
 
 
 def incremental_append_stream(
@@ -111,29 +33,32 @@ def incremental_append_stream(
 ) -> StreamingQuery:
     """Exactly-once idempotent append from a landing directory.
 
-    Every micro-batch: left_anti against the CURRENT target on
-    ``key_cols`` (same semantics as ``load.py:133-160``), append the
-    complement. Checkpointing makes re-runs no-ops even after crashes
-    — strictly stronger than the reference's read-the-whole-table
-    idempotence.
+    Every micro-batch goes through the idempotent-append gate
+    ``operators.anti_join_new_rows`` against the CURRENT target on
+    ``key_cols`` (same semantics as ``load.py:133-160``) and its new
+    rows are appended to ``target_dir``. Checkpointing makes
+    re-runs no-ops even after crashes — strictly stronger than the
+    reference's read-the-whole-table idempotence.
 
     Scale: the reference re-read ALL target keys per run
-    (``load.py:127-131``); here the existing-keys read is pruned to
-    the batch's key min/max (``pruned_existing_keys``), so per-batch
-    cost tracks the batch, not the accumulated target."""
+    (``load.py:127-131``); for numeric, date and timestamp keys the gate
+    prunes the existing-keys read to the batch's key min/max, pushed
+    into the parquet scan as row-group skipping, so per-batch cost
+    tracks the batch, not the accumulated target."""
+    from dpe_energy_performance_analysis_etl_spark.operators import anti_join_new_rows
+    from dpe_energy_performance_analysis_etl_spark.sources import read_parquet, write_parquet
+    from dpe_energy_performance_analysis_etl_spark.sources.sinks import _dir_has_data
+
     stream = spark.readStream.schema(schema).parquet(source_dir)
 
     def upsert_batch(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.dropDuplicates(key_cols).persist()
+        batch = batch.persist()
         try:
             sess = batch.sparkSession
+            existing = None
             if _dir_has_data(sess, target_dir):
-                bounds = key_bounds(batch, key_cols)
-                existing = pruned_existing_keys(sess, target_dir, key_cols, bounds)
-                new_rows = _anti_join_keys(batch, existing, key_cols)
-            else:
-                new_rows = batch  # first batch: target doesn't exist yet
-            new_rows.write.mode("append").parquet(target_dir)
+                existing = read_parquet(sess, target_dir).select(*key_cols)
+            write_parquet(anti_join_new_rows(batch, existing, key_cols), target_dir, mode="append")
         finally:
             batch.unpersist()
 
@@ -227,50 +152,6 @@ def streaming_dedup(
     return writer.start()
 
 
-def _sql_literal(v) -> str | None:
-    """Render a Python value as an ANSI-SQL literal for pushed key
-    predicates; None for types we don't render (caller then skips the
-    predicate for that column — always safe, the prune is advisory)."""
-    import datetime
-    import decimal
-
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, (int, decimal.Decimal)):
-        return str(v)
-    if isinstance(v, float):
-        return repr(v)
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
-    if isinstance(v, datetime.datetime):
-        return f"TIMESTAMP '{v.strftime('%Y-%m-%d %H:%M:%S.%f')}'"
-    if isinstance(v, datetime.date):
-        return f"DATE '{v.isoformat()}'"
-    return None
-
-
-def bounds_predicate_sql(key_cols: list[str], bounds: dict[str, tuple]) -> str | None:
-    """WHERE-clause fragment restricting a JDBC existing-keys read to
-    the micro-batch's key range (see ``pruned_existing_keys`` for the
-    parquet twin). Conjunction over key columns; a column whose bounds
-    can't be rendered is skipped (superset read — still correct)."""
-    parts = []
-    for k in key_cols:
-        lo, hi, has_null = bounds[k]
-        if lo is None and not has_null:
-            return "1=0"  # empty batch: nothing can anti-join
-        p = None
-        if lo is not None:
-            lo_sql, hi_sql = _sql_literal(lo), _sql_literal(hi)
-            if lo_sql is None or hi_sql is None:
-                continue
-            p = f"{k} BETWEEN {lo_sql} AND {hi_sql}"
-        if has_null:
-            p = f"({p} OR {k} IS NULL)" if p else f"{k} IS NULL"
-        parts.append(f"({p})")
-    return " AND ".join(parts) if parts else None
-
-
 def stream_to_jdbc(
     spark: SparkSession,
     source_dir: str,
@@ -283,47 +164,38 @@ def stream_to_jdbc(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming idempotent load into a live database: per micro-batch,
-    anti-join the batch against the CURRENT table keys and append only
-    the complement (J3/J4 + S12, ``load.py:133-176``, as a stream).
+    the idempotent-append gate ``operators.anti_join_new_rows`` against
+    the CURRENT table keys, then append of its new rows (J3/J4 + S12,
+    ``load.py:133-176``, as a stream).
 
     Spark has no native JDBC streaming sink, so ``foreachBatch``
-    supplies one; combined with the anti-join the write is
-    effectively exactly-once even though plain JDBC appends are only
-    at-least-once under retries — a replayed batch finds its keys
-    already present and appends nothing.
+    supplies one (``sources.jdbc_sink``); combined with the gate the
+    write is effectively exactly-once even though plain JDBC appends
+    are only at-least-once under retries — a replayed batch finds its
+    keys already present and appends nothing.
 
-    Scale: the existing-keys read pushes the batch's key min/max down
-    into the database (``bounds_predicate_sql``) — the server scans an
-    index range, not the full table, per batch. No broadcast hint on
+    Scale: for numeric, date and timestamp keys the gate's key-range
+    filter on the existing-keys read is pushed by Spark into the
+    database query — the server scans an index range, not the full
+    table, per batch. No broadcast hint on
     the existing side: past ~10⁸ keys a forced broadcast OOMs the
     driver; the pruned read is small enough that AQE picks broadcast
     by itself when it actually fits. Table existence is probed via
-    JDBC metadata (``jdbc_table_exists``) so a transient connectivity
-    failure fails the micro-batch (checkpoint retries) instead of
-    silently skipping the anti-join and duplicating rows."""
-    from dpe_energy_performance_analysis_etl_spark.sources import (
-        append_jdbc_table,
-        jdbc_table_exists,
-        read_jdbc_table,
-    )
+    JDBC metadata so a transient connectivity failure fails the
+    micro-batch (checkpoint retries) instead of silently skipping the
+    gate and duplicating rows."""
+    from dpe_energy_performance_analysis_etl_spark.operators import anti_join_new_rows
+    from dpe_energy_performance_analysis_etl_spark.sources import jdbc_sink
 
     stream = spark.readStream.schema(schema).parquet(source_dir)
 
     def load_batch(batch: DataFrame, batch_id: int) -> None:
-        deduped = batch.dropDuplicates(key_cols).persist()
+        batch = batch.persist()
         try:
-            sess = deduped.sparkSession
-            new_rows = deduped
-            if jdbc_table_exists(sess, url, table, properties):
-                predicate = bounds_predicate_sql(key_cols, key_bounds(deduped, key_cols))
-                existing = read_jdbc_table(
-                    sess, url, table, properties, columns=key_cols, predicate=predicate
-                )
-                existing = existing.toDF(*key_cols)
-                new_rows = _anti_join_keys(deduped, existing, key_cols)
-            append_jdbc_table(new_rows, url, table, properties)
+            read_existing_keys, append = jdbc_sink(batch.sparkSession, url, properties)
+            append(anti_join_new_rows(batch, read_existing_keys(table, key_cols), key_cols), table)
         finally:
-            deduped.unpersist()
+            batch.unpersist()
 
     writer = (
         stream.writeStream.foreachBatch(load_batch)

@@ -88,23 +88,17 @@ class TestPartitionSkewReport:
 
 def test_orc_roundtrip_and_text_scan(spark, tmp_path):
     """ORC sink/scan parity with parquet content; raw text-line scan
-    (sources/io.py read_orc / write_orc / read_text_lines)."""
-    from dpe_energy_performance_analysis_etl_spark.sources.io import (
-        read_orc,
-        read_text_lines,
-        write_orc,
-    )
-
+    (Spark's built-in ``orc`` and ``text`` sources)."""
     df = spark.range(50).selectExpr("id", "id % 5 as grp", "cast(id * 1.5 as double) as v")
-    write_orc(df, str(tmp_path / "orc"), partition_by=["grp"])
-    back = read_orc(spark, str(tmp_path / "orc"))
+    df.write.option("compression", "zlib").partitionBy("grp").orc(str(tmp_path / "orc"))
+    back = spark.read.orc(str(tmp_path / "orc"))
     assert back.count() == 50
     assert {r.id for r in back.select("id").collect()} == set(range(50))
     # Partition pruning: grp filter reads a subset of files.
     assert back.filter("grp = 2").count() == 10
 
     (tmp_path / "log.txt").write_text("alpha\nbeta\ngamma\n")
-    lines = read_text_lines(spark, str(tmp_path / "log.txt"))
+    lines = spark.read.text(str(tmp_path / "log.txt"))
     assert [r.value for r in lines.orderBy("value").collect()] == ["alpha", "beta", "gamma"]
 
 

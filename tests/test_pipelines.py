@@ -115,29 +115,78 @@ def test_loader_respects_fk_order(extractor, enedis_csv, spark, zones):
     assert order_seen[0] == "tests_statistiques_dpe" and order_seen[-1] == "logements"
 
 
-def test_loader_upsert_strategy(extractor, enedis_csv, spark, zones):
-    """strategy='upsert' routes every table through the injected
-    upsert callable with its PK — no key read, no anti-join."""
-    from dpe_energy_performance_analysis_etl_spark.pipelines.transform import ENTITY_PKS
+def _memory_sink(spark, keys: dict[str, list] | None = None):
+    """(read_existing_keys, append) over an in-memory dict of DataFrames,
+    optionally preloaded with one-column key lists; ``appended`` maps
+    each table to the rows written to it."""
+    appended: dict[str, list] = {}
 
-    silver = extractor.extract(enedis_csv)
-    entities = DataTransformer(spark, silver, zones).run()
-    calls = []
+    def read_existing(table, key_cols):
+        if table not in (keys or {}):
+            return None
+        return spark.createDataFrame([(k,) for k in keys[table]], f"{key_cols[0]} string")
 
-    def upsert(df, table, pk):
-        calls.append((table, tuple(pk), df.count()))
+    def append(df, table):
+        appended.setdefault(table, []).extend(df.collect())
 
-    def no_read(table, key_cols):  # must never be consulted
-        raise AssertionError("upsert strategy must not read existing keys")
+    return read_existing, append, appended
 
-    loader = DataLoader(
-        spark, zones, read_existing_keys=no_read, strategy="upsert", upsert=upsert
+
+def test_loader_skips_a_null_key_the_sink_holds(spark, zones):
+    """A sink that already holds a null key gets no second row for it:
+    the gate compares keys null-safely, as ``dropDuplicates`` does."""
+    batch = spark.createDataFrame(
+        [(None, "again"), ("a", "again"), ("b", "new")], "id_ban string, label_ban string"
     )
-    counts = loader.run(entities)
-    assert sum(counts.values()) > 0
-    assert {t for t, _, _ in calls} == {t for t, n in counts.items() if n > 0}
-    for table, pk, n in calls:
-        assert pk == tuple(ENTITY_PKS[table]) and n > 0
+    read_existing, append, appended = _memory_sink(spark, {"adresses": ["a", None]})
+    counts = DataLoader(spark, zones, read_existing_keys=read_existing, append=append).run(
+        {"adresses": batch}
+    )
+    assert counts == {"adresses": 1}
+    assert [r.id_ban for r in appended["adresses"]] == ["b"]
+
+
+def test_loader_keeps_the_same_row_per_key_in_any_order(spark, zones):
+    """Gold rows with several rows per PK, handed to the loader in two
+    orders, write the same row per key: the gate keeps a fixed row, not
+    whichever row a partition meets first."""
+    from pyspark.sql import functions as F
+
+    rows = [(f"id{k}", f"v{v}", float(v)) for k in range(5) for v in range(4)]
+    gold = spark.createDataFrame(rows, "_id_ademe string, label string, conso double")
+    written = []
+    for order in (F.col("label").asc(), F.col("label").desc()):
+        read_existing, append, appended = _memory_sink(spark)
+        loader = DataLoader(spark, zones, read_existing_keys=read_existing, append=append)
+        assert loader.run({"logements": gold.orderBy(order).coalesce(1)}) == {"logements": 5}
+        written.append(sorted(map(tuple, appended["logements"])))
+    assert written[0] == written[1]
+    assert [r[0] for r in written[0]] == [f"id{k}" for k in range(5)]
+
+
+def test_loader_over_derby_appends_nothing_on_rerun(spark, zones, tmp_path, monkeypatch):
+    """The loader's default JDBC sink on embedded Derby, string keys in
+    CLOB columns (Spark's Derby type for a string): a second run over
+    the same gold rows, null key included, appends nothing. Derby
+    cannot compare CLOB, so the gate must not push a key range for
+    string keys into the key read."""
+    from dpe_energy_performance_analysis_etl_spark.config import EngineConfig
+    from dpe_energy_performance_analysis_etl_spark.sources import read_jdbc_table
+    from dpe_energy_performance_analysis_etl_spark.sources.jdbc_dialect import execute_statements
+
+    url = f"jdbc:derby:{tmp_path}/loaddb;create=true"
+    props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
+    # unquoted DDL: Derby folds the names to upper case, which the
+    # sink's unquoted key read resolves
+    execute_statements(spark, url, props, ["CREATE TABLE adresses (id_ban CLOB, label_ban CLOB)"])
+    monkeypatch.setattr(EngineConfig, "jdbc_properties", property(lambda self: props))
+    zones.jdbc_url = url
+    gold = spark.createDataFrame(
+        [("a", "x"), ("b", "y"), (None, "z")], "id_ban string, label_ban string"
+    )
+    assert DataLoader(spark, zones).run({"adresses": gold}) == {"adresses": 3}
+    assert DataLoader(spark, zones).run({"adresses": gold}) == {"adresses": 0}
+    assert read_jdbc_table(spark, url, "adresses", props).count() == 3
 
 
 def _counted(fetch, acc):

@@ -123,13 +123,12 @@ class TestSchemaEvolutionScan:
 class TestXmlSource:
     def test_roundtrip_and_schema(self, spark, tmp_path):
         from pyspark.sql import types as T
-        from dpe_energy_performance_analysis_etl_spark.sources.io import read_xml, write_xml
 
         df = spark.createDataFrame(
             [(1, "alpha", 9.5), (2, "beta", -1.0)], "id long, name string, score double"
         )
         p = str(tmp_path / "xmlzone")
-        write_xml(df, p, row_tag="rec", root_tag="recs")
+        df.write.format("xml").option("rowTag", "rec").option("rootTag", "recs").save(p)
         schema = T.StructType(
             [
                 T.StructField("id", T.LongType()),
@@ -137,14 +136,12 @@ class TestXmlSource:
                 T.StructField("score", T.DoubleType()),
             ]
         )
-        back = read_xml(spark, p, row_tag="rec", schema=schema)
+        back = spark.read.format("xml").option("rowTag", "rec").schema(schema).load(p)
         assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
     def test_inference_path(self, spark, tmp_path):
-        from dpe_energy_performance_analysis_etl_spark.sources.io import read_xml, write_xml
-
         df = spark.createDataFrame([(7, "x")], "id long, name string")
         p = str(tmp_path / "xmlzone2")
-        write_xml(df, p)
-        back = read_xml(spark, p)
+        df.write.format("xml").option("rowTag", "row").save(p)
+        back = spark.read.format("xml").option("rowTag", "row").load(p)
         assert back.count() == 1 and set(back.columns) == {"id", "name"}

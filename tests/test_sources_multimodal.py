@@ -241,46 +241,6 @@ def test_write_parquet_sorted_rowgroups(spark, tmp_path):
         assert hi1 <= lo2, f"overlapping file ranges: {hi1} > {lo2}"
 
 
-def test_paged_rest_datasource(spark, tmp_path):
-    """Spark 4 Python Data Source: pages fetched as separate input
-    partitions through file:// URLs (offline twin of the HTTP path),
-    missing fields null, declared schema enforced."""
-    import json
-
-    import pytest
-
-    from dpe_energy_performance_analysis_etl_spark.sources import register_datasources
-
-    pages = tmp_path / "pages"
-    pages.mkdir()
-    total, page_size = 25, 10
-    for off in range(0, total, page_size):
-        rows = [
-            {"k": i, "name": f"row_{i}"} | ({"extra": "x"} if i % 2 else {})
-            for i in range(off, min(off + page_size, total))
-        ]
-        (pages / f"p_{off}.json").write_text(json.dumps({"results": rows}))
-
-    register_datasources(spark)
-    register_datasources(spark)  # idempotent re-register
-    df = (
-        spark.read.format("paged_rest")
-        .schema("k long, name string, missing string")
-        .option("url", f"file://{pages}/p_{{offset}}.json")
-        .option("total", total)
-        .option("page_size", page_size)
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 3  # one per page
-    rows = {r["k"]: r for r in df.collect()}
-    assert len(rows) == total
-    assert rows[7]["name"] == "row_7" and rows[7]["missing"] is None
-
-    # declared-schema contract: no schema -> loud error
-    with pytest.raises(Exception, match="schema"):
-        spark.read.format("paged_rest").option("url", "x").option("total", 1).load()
-
-
 def test_read_media_dir_binary_file_source(spark, tmp_path):
     """binaryFile ingestion: one row per file with size/hash metadata,
     glob filtering, and a length pushdown that skips big files at the
