@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from dpe_energy_performance_analysis_etl_spark.sources.io import hadoop_fs
+
 # Spark and pyarrow both target ~128 MB row groups by default; a file
 # contributes roughly size/128MB schedulable units of scan work.
 _ROWGROUP_BYTES = 128 * 1024 * 1024
@@ -38,13 +40,9 @@ def _estimated_file_parallelism(df: DataFrame, files: list[str], cap: int) -> in
     (byte-splits beyond that are no-ops for single-row-group files).
     Driver-side metadata lookups, capped — with >= cap files the
     answer is already 'parallel enough'."""
-    spark = df.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
     est = 0
     for f in files:
-        path = jvm.org.apache.hadoop.fs.Path(f)
-        fs = path.getFileSystem(conf)
+        fs, path = hadoop_fs(df.sparkSession, f)
         size = fs.getFileStatus(path).getLen()
         est += max(1, int(size) // _ROWGROUP_BYTES)
         if est >= cap:

@@ -3,12 +3,14 @@
 into a relational sink, in FK-safe order.
 
 Per table (``save_one_table``, ``load.py:85-176``): PK cast to string
-→ read EXISTING KEY COLUMNS ONLY from the sink (the reference pulled
-the whole table into pandas, ``load.py:127-131`` — at scale that's the
-difference between reading a key index and reading terabytes) → the
-idempotent-append gate ``operators.anti_join_new_rows`` (one row per
-key, null-safe left_anti J3/J4 against the existing keys the batch
-holds) → skip-if-empty gate → append S12.
+→ read EXISTING KEY COLUMNS ONLY from the sink, through Spark's own
+JDBC or parquet reader, which prunes the scan to them (the reference
+pulled the whole table into pandas, ``load.py:127-131`` — at scale
+that's the difference between reading a key index and reading
+terabytes) → the idempotent-append gate
+``operators.anti_join_new_rows`` (one row per key, null-safe
+left_anti J3/J4 against the existing keys the batch holds) →
+skip-if-empty gate → append S12 (Spark's JDBC or parquet writer).
 
 ``run`` overlaps the tables' gates: it computes every table's new-row
 frame and count at the same time, one thread per table, then appends

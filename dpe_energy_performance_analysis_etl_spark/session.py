@@ -51,6 +51,14 @@ _DEFAULTS = {
 }
 
 
+def default_driver_memory() -> str:
+    """Local-mode driver heap: 16g, capped at three quarters of the
+    host's physical memory so the JVM never claims the whole machine
+    (16g is all of a 16 GB host's RAM)."""
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, physical * 3 // 4 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "dpe_spark_engine",
     master: str | None = None,
@@ -61,6 +69,8 @@ def get_spark(
 
     Env overrides (all optional):
       - ``SPARK_GRAFT_CPUS``: local parallelism (default: all cores).
+      - ``SPARK_GRAFT_DRIVER_MEM``: local-mode driver heap (default:
+        ``default_driver_memory()``).
       - ``SPARK_GRAFT_SHUFFLE_PARTITIONS``: shuffle width (default:
         2x local cores locally; on a real cluster set ~2-3x total
         executor cores, or leave AQE to coalesce a high initial count).
@@ -89,7 +99,8 @@ def get_spark(
         # 6 M-row lineitem). Static conf: applies only when this call
         # actually launches the JVM.
         builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
 
     endpoint = os.environ.get("ENGINE_S3_ENDPOINT")

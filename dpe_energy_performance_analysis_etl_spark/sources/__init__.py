@@ -1,12 +1,8 @@
 from dpe_energy_performance_analysis_etl_spark.sources.io import (
     read_csv,
-    read_parquet,
     read_json_lines,
     write_parquet,
     materialize_parquet,
-    write_json_lines,
-    read_jdbc_table,
-    append_jdbc_table,
     purge_dir,
     write_bucketed_table,
     dir_stats,
@@ -37,13 +33,9 @@ __all__ = [
     "dir_stats",
     "compact_parquet_dir",
     "read_csv",
-    "read_parquet",
     "read_json_lines",
     "write_parquet",
     "materialize_parquet",
-    "write_json_lines",
-    "read_jdbc_table",
-    "append_jdbc_table",
     "purge_dir",
     "write_bucketed_table",
     "RateLimiter",

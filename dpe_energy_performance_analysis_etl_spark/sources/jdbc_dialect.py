@@ -219,8 +219,8 @@ def upsert_jdbc_table(
 ) -> None:
     """Distributed upsert: parallel-write ``df`` to a staging table,
     one server-side merge into ``table``, drop staging. The target
-    must already exist (create it with ``append_jdbc_table`` +
-    ``createTableColumnTypes`` from the dialect, or your own DDL) and
+    must already exist (create it with Spark's JDBC writer and the
+    dialect's ``createTableColumnTypes``, or your own DDL) and
     have a unique/PK constraint on ``key_cols`` for Postgres
     ON CONFLICT to engage."""
     dialect = dialect or dialect_for_url(url)

@@ -6,30 +6,28 @@ ETL loader (``pipelines/load.py``) and the streaming loaders
 
 ``read_existing_keys`` returns ``None`` when the sink has no such
 table yet (everything is new), else a lazy scan of the key columns
-only, so the gate's range filter pushes into it. Table existence is an
-explicit probe, not read-and-catch: a transient failure must raise
-(the run or micro-batch retries), not read as "table absent", skip
-the gate and append duplicates.
+only (Spark's parquet or JDBC reader), so the gate's range filter
+pushes into it. Table existence is an explicit probe, not
+read-and-catch: a transient failure must raise (the run or
+micro-batch retries), not read as "table absent", skip the gate and
+append duplicates.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from dpe_energy_performance_analysis_etl_spark.sources.io import (
-    append_jdbc_table,
-    read_jdbc_table,
-    read_parquet,
-    write_parquet,
-)
+from dpe_energy_performance_analysis_etl_spark.sources.io import hadoop_fs, write_parquet
 from dpe_energy_performance_analysis_etl_spark.sources.jdbc_dialect import jdbc_table_exists
+
+# Rows per INSERT batch on JDBC appends (Spark's default is 1 000).
+_JDBC_BATCHSIZE = 10_000
 
 
 def _dir_has_data(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` exists and holds at least one data file
     (Hadoop FS, so local/s3a/hdfs uniformly)."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return False
     it = fs.listFiles(hpath, True)
@@ -48,7 +46,7 @@ def parquet_sink(spark: SparkSession, root: str):
     def read_existing_keys(table: str, key_cols: list[str]) -> DataFrame | None:
         if not _dir_has_data(spark, f"{root}/{table}"):
             return None
-        return read_parquet(spark, f"{root}/{table}").select(*key_cols)
+        return spark.read.parquet(f"{root}/{table}").select(*key_cols)
 
     def append(df: DataFrame, table: str) -> None:
         write_parquet(df, f"{root}/{table}", mode="append")
@@ -58,17 +56,23 @@ def parquet_sink(spark: SparkSession, root: str):
 
 def jdbc_sink(spark: SparkSession, url: str | None, properties: dict[str, str]):
     """Tables in the database at ``url`` — the loader's default sink
-    and ``stream_to_jdbc``'s. Key columns come back under the caller's
-    names whatever case the server folded them to."""
+    and ``stream_to_jdbc``'s. Spark's JDBC reader quotes the key
+    columns in its query, so a table Spark created (case-exact,
+    lower-case names) and one created by unquoted DDL (names folded
+    to upper case by Derby, Oracle, DB2) both resolve; the keys come
+    back under the caller's names."""
 
     def read_existing_keys(table: str, key_cols: list[str]) -> DataFrame | None:
         assert url, "ENGINE_JDBC_URL not configured"
         if not jdbc_table_exists(spark, url, table, properties):
             return None
-        return read_jdbc_table(spark, url, table, properties, columns=key_cols).toDF(*key_cols)
+        existing = spark.read.jdbc(url, table, properties=properties)
+        return existing.select(*[F.col(k).alias(k) for k in key_cols])
 
     def append(df: DataFrame, table: str) -> None:
         assert url, "ENGINE_JDBC_URL not configured"
-        append_jdbc_table(df, url, table, properties)
+        df.write.option("batchsize", _JDBC_BATCHSIZE).jdbc(
+            url, table, mode="append", properties=properties
+        )
 
     return read_existing_keys, append

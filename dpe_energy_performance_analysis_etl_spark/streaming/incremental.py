@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from dpe_energy_performance_analysis_etl_spark.sources.io import hadoop_fs
+
 
 def incremental_append_stream(
     spark: SparkSession,
@@ -46,7 +48,7 @@ def incremental_append_stream(
     into the parquet scan as row-group skipping, so per-batch cost
     tracks the batch, not the accumulated target."""
     from dpe_energy_performance_analysis_etl_spark.operators import anti_join_new_rows
-    from dpe_energy_performance_analysis_etl_spark.sources import read_parquet, write_parquet
+    from dpe_energy_performance_analysis_etl_spark.sources import write_parquet
     from dpe_energy_performance_analysis_etl_spark.sources.sinks import _dir_has_data
 
     stream = spark.readStream.schema(schema).parquet(source_dir)
@@ -57,7 +59,7 @@ def incremental_append_stream(
             sess = batch.sparkSession
             existing = None
             if _dir_has_data(sess, target_dir):
-                existing = read_parquet(sess, target_dir).select(*key_cols)
+                existing = sess.read.parquet(target_dir).select(*key_cols)
             write_parquet(anti_join_new_rows(batch, existing, key_cols), target_dir, mode="append")
         finally:
             batch.unpersist()
@@ -407,16 +409,9 @@ def maintained_user_days_stream(
     )
 
 
-def _state_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm, fs, hpath
-
-
 def _state_versions(spark: SparkSession, state_dir: str, below: int | None = None) -> list[int]:
     """Complete (``_SUCCESS``-marked) state versions, ascending."""
-    jvm, fs, root = _state_fs(spark, state_dir)
+    fs, root = hadoop_fs(spark, state_dir)
     if not fs.exists(root):
         return []
     versions = []
@@ -427,13 +422,13 @@ def _state_versions(spark: SparkSession, state_dir: str, below: int | None = Non
         v = int(name[2:])
         if below is not None and v >= below:
             continue
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")):
+        if fs.exists(spark._jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")):
             versions.append(v)
     return sorted(versions)
 
 
 def _gc_state_versions(spark: SparkSession, state_dir: str, keep: list[int]) -> None:
-    jvm, fs, root = _state_fs(spark, state_dir)
+    fs, root = hadoop_fs(spark, state_dir)
     for st in fs.listStatus(root):
         name = st.getPath().getName()
         if name.startswith("v=") and int(name[2:]) not in keep:

@@ -1,28 +1,20 @@
 """Live JDBC round-trip against embedded Derby (bundled with Spark's
 Hive-metastore dependencies), closing the "JDBC untested live" gap:
 S11/S12 (``load.py:127-131,170-176``) exercised against a real
-database — table auto-creation on append, column-pruned and
-predicated reads, parallel range-partitioned scans, and the
-anti-join idempotent-append pipeline (J3/J4, ``load.py:139-160``).
+database through Spark's own JDBC reader and writer — table
+auto-creation on append, column-pruned and filtered reads, parallel
+range-partitioned scans, and the anti-join idempotent-append pipeline
+(J3/J4, ``load.py:139-160``).
 
-Identifier note: Spark's JDBC writer CREATEs columns with quoted
-(case-exact) names, which in Derby makes lowercase names unreachable
-from unquoted SQL. The portable convention — used here and expected
-of callers — is to upper-case column names before appending so the
-pushed-down projections/predicates (unquoted, case-folded by the
-database) resolve.
+Spark's JDBC writer creates columns with quoted (case-exact) names and
+its reader quotes the columns it selects and filters on, so the
+engine's lower-case names round-trip as they are.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from dpe_energy_performance_analysis_etl_spark.sources import append_jdbc_table, read_jdbc_table
-
 DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
-
-
-def upper_cols(df):
-    return df.toDF(*[c.upper() for c in df.columns])
 
 
 @pytest.fixture(scope="module")
@@ -38,21 +30,21 @@ def props():
 
 def test_jdbc_append_creates_and_reads_back(spark, derby_url, props):
     nation = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
-    append_jdbc_table(upper_cols(nation), derby_url, "NATION_T", props)
-    back = read_jdbc_table(spark, derby_url, "NATION_T", props)
+    nation.write.jdbc(derby_url, "NATION_T", mode="append", properties=props)
+    back = spark.read.jdbc(derby_url, "NATION_T", properties=props)
     assert back.count() == nation.count()
     assert set(c.lower() for c in back.columns) == set(nation.columns)
 
 
 def test_jdbc_column_pruning_and_predicate(spark, derby_url, props):
-    back = read_jdbc_table(
-        spark,
-        derby_url,
-        "NATION_T",
-        props,
-        columns=["N_NATIONKEY", "N_NAME"],
-        predicate="N_REGIONKEY = 2",
+    back = (
+        spark.read.jdbc(derby_url, "NATION_T", properties=props)
+        .filter("n_regionkey = 2")
+        .select("n_nationkey", "n_name")
     )
+    plan = back._jdf.queryExecution().executedPlan().toString()
+    assert "PushedFilters: [*IsNotNull(n_regionkey), *EqualTo(n_regionkey,2)]" in plan, plan
+    assert "ReadSchema: struct<n_nationkey:int,n_name:string>" in plan, plan
     assert [c.lower() for c in back.columns] == ["n_nationkey", "n_name"]
     expect = (
         spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
@@ -64,21 +56,20 @@ def test_jdbc_column_pruning_and_predicate(spark, derby_url, props):
 
 def test_jdbc_parallel_range_read(spark, derby_url, props):
     cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
-    append_jdbc_table(upper_cols(cust), derby_url, "CUSTOMER_T", props)
+    cust.write.jdbc(derby_url, "CUSTOMER_T", mode="append", properties=props)
     lo, hi = 0, cust.agg(F.max("c_custkey")).collect()[0][0] + 1
-    back = read_jdbc_table(
-        spark,
+    back = spark.read.jdbc(
         derby_url,
         "CUSTOMER_T",
-        props,
-        partition_column="C_CUSTKEY",
-        num_partitions=4,
-        lower_bound=lo,
-        upper_bound=hi,
+        column="c_custkey",
+        lowerBound=lo,
+        upperBound=hi,
+        numPartitions=4,
+        properties=props,
     )
     assert back.rdd.getNumPartitions() == 4
     assert back.count() == cust.count()
-    assert back.select(F.sum("C_CUSTKEY")).collect()[0][0] == cust.select(
+    assert back.select(F.sum("c_custkey")).collect()[0][0] == cust.select(
         F.sum("c_custkey")
     ).collect()[0][0]
 
@@ -88,17 +79,17 @@ def test_jdbc_idempotent_append_pipeline(spark, derby_url, props):
     duplicate rows (the reference's idempotence contract)."""
     from dpe_energy_performance_analysis_etl_spark.operators import anti_join_new_rows
 
-    region = upper_cols(spark.read.parquet("/root/testdata/sf0.001/region.parquet"))
-    append_jdbc_table(region, derby_url, "REGION_T", props)
+    region = spark.read.parquet("/root/testdata/sf0.001/region.parquet")
+    region.write.jdbc(derby_url, "REGION_T", mode="append", properties=props)
 
-    existing = read_jdbc_table(spark, derby_url, "REGION_T", props, columns=["R_REGIONKEY"])
-    fresh = anti_join_new_rows(region, existing, ["R_REGIONKEY"])
+    existing = spark.read.jdbc(derby_url, "REGION_T", properties=props).select("r_regionkey")
+    fresh = anti_join_new_rows(region, existing, ["r_regionkey"])
     assert fresh.count() == 0  # everything already present
 
-    two_new = region.withColumn("R_REGIONKEY", F.col("R_REGIONKEY") + 100)
-    fresh2 = anti_join_new_rows(two_new, existing, ["R_REGIONKEY"])
-    append_jdbc_table(fresh2, derby_url, "REGION_T", props)
-    assert read_jdbc_table(spark, derby_url, "REGION_T", props).count() == 2 * region.count()
+    two_new = region.withColumn("r_regionkey", F.col("r_regionkey") + 100)
+    fresh2 = anti_join_new_rows(two_new, existing, ["r_regionkey"])
+    fresh2.write.jdbc(derby_url, "REGION_T", mode="append", properties=props)
+    assert spark.read.jdbc(derby_url, "REGION_T", properties=props).count() == 2 * region.count()
 
 
 # ---------------------------------------------------------------------
@@ -114,8 +105,6 @@ def test_upsert_merge_live_derby(spark, derby_url, props):
 
     from dpe_energy_performance_analysis_etl_spark.sources import (
         DERBY,
-        append_jdbc_table,
-        read_jdbc_table,
         upsert_jdbc_table,
     )
     from dpe_energy_performance_analysis_etl_spark.sources.jdbc_dialect import (
@@ -131,7 +120,7 @@ def test_upsert_merge_live_derby(spark, derby_url, props):
     base = spark.createDataFrame(
         [(1, "one", 1.0), (2, "two", 2.0), (3, "three", 3.0)], ["K", "V", "N"]
     )
-    append_jdbc_table(base, derby_url, "UPS_T", props)
+    base.write.jdbc(derby_url, "UPS_T", mode="append", properties=props)
 
     delta = spark.createDataFrame(
         [(2, "TWO*", 2.5), (4, "four", 4.0)], ["K", "V", "N"]
@@ -139,7 +128,7 @@ def test_upsert_merge_live_derby(spark, derby_url, props):
     upsert_jdbc_table(delta, derby_url, "UPS_T", ["K"], props, dialect=DERBY)
     upsert_jdbc_table(delta, derby_url, "UPS_T", ["K"], props, dialect=DERBY)  # idempotent
 
-    back = read_jdbc_table(spark, derby_url, "UPS_T", props)
+    back = spark.read.jdbc(derby_url, "UPS_T", properties=props)
     rows = {r["K"]: (r["V"], r["N"]) for r in back.collect()}
     assert rows == {1: ("one", 1.0), 2: ("TWO*", 2.5), 3: ("three", 3.0), 4: ("four", 4.0)}
 
@@ -290,8 +279,6 @@ def test_upsert_merge_composite_key_live_derby(spark, derby_url, props):
     matching on only one key must INSERT, not UPDATE."""
     from dpe_energy_performance_analysis_etl_spark.sources import (
         DERBY,
-        append_jdbc_table,
-        read_jdbc_table,
         upsert_jdbc_table,
     )
     from dpe_energy_performance_analysis_etl_spark.sources.jdbc_dialect import (
@@ -310,7 +297,7 @@ def test_upsert_merge_composite_key_live_derby(spark, derby_url, props):
     base = spark.createDataFrame(
         [(1, "a", 1.0), (1, "b", 2.0), (2, "a", 3.0)], ["K1", "K2", "V"]
     )
-    append_jdbc_table(base, derby_url, "UPS_CK", props)
+    base.write.jdbc(derby_url, "UPS_CK", mode="append", properties=props)
 
     # (1,"a") matches both keys -> update; (2,"b") matches K1 only ->
     # insert; (3,"c") matches nothing -> insert
@@ -320,7 +307,7 @@ def test_upsert_merge_composite_key_live_derby(spark, derby_url, props):
     upsert_jdbc_table(delta, derby_url, "UPS_CK", ["K1", "K2"], props, dialect=DERBY)
     upsert_jdbc_table(delta, derby_url, "UPS_CK", ["K1", "K2"], props, dialect=DERBY)
 
-    back = read_jdbc_table(spark, derby_url, "UPS_CK", props)
+    back = spark.read.jdbc(derby_url, "UPS_CK", properties=props)
     rows = {(r["K1"], r["K2"]): r["V"] for r in back.collect()}
     assert rows == {
         (1, "a"): 10.0,
@@ -339,8 +326,6 @@ def test_upsert_merge_mixed_case_identifiers_live_derby(spark, derby_url, props)
     from unquoted SQL in Derby) still round-trips."""
     from dpe_energy_performance_analysis_etl_spark.sources import (
         DERBY,
-        append_jdbc_table,
-        read_jdbc_table,
         upsert_jdbc_table,
     )
     from dpe_energy_performance_analysis_etl_spark.sources.jdbc_dialect import (
@@ -353,13 +338,13 @@ def test_upsert_merge_mixed_case_identifiers_live_derby(spark, derby_url, props)
         props,
         ['CREATE TABLE UPS_MC ("Id" BIGINT PRIMARY KEY, "Val Ue" VARCHAR(16))'],
     )
-    append_jdbc_table(
-        spark.createDataFrame([(1, "old")], ["Id", "Val Ue"]), derby_url, "UPS_MC", props
+    spark.createDataFrame([(1, "old")], ["Id", "Val Ue"]).write.jdbc(
+        derby_url, "UPS_MC", mode="append", properties=props
     )
     delta = spark.createDataFrame([(1, "new"), (2, "ins")], ["Id", "Val Ue"])
     upsert_jdbc_table(delta, derby_url, "UPS_MC", ["Id"], props, dialect=DERBY)
 
-    back = read_jdbc_table(spark, derby_url, "UPS_MC", props)
+    back = spark.read.jdbc(derby_url, "UPS_MC", properties=props)
     assert back.columns == ["Id", "Val Ue"]
     rows = {r["Id"]: r["Val Ue"] for r in back.collect()}
     assert rows == {1: "new", 2: "ins"}
@@ -388,7 +373,7 @@ def test_ddl_type_overrides_land_in_derby_catalog(spark, derby_url, props):
 
     from pyspark.sql import types as T
 
-    from dpe_energy_performance_analysis_etl_spark.sources import DERBY
+    from dpe_energy_performance_analysis_etl_spark.sources import DERBY, dialect_for_url
     from dpe_energy_performance_analysis_etl_spark.sources.jdbc_dialect import _connect
 
     schema = T.StructType(
@@ -415,13 +400,21 @@ def test_ddl_type_overrides_land_in_derby_catalog(spark, derby_url, props):
         finally:
             conn.close()
 
+    def append(table, dialect=None):
+        writer = df.write
+        if dialect is not None:
+            writer = writer.option(
+                "createTableColumnTypes", dialect.create_table_column_types(df.schema)
+            )
+        writer.jdbc(derby_url, table, mode="append", properties=props)
+
     # default Spark mapping: StringType -> CLOB (the problem)
-    append_jdbc_table(df, derby_url, "DDL_PLAIN", props)
+    append("DDL_PLAIN")
     plain = column_types("DDL_PLAIN")
     assert plain["NAME"][0] == "CLOB"
 
-    # dialect="auto" resolves DERBY from the URL and fixes it
-    append_jdbc_table(df, derby_url, "DDL_DIALECT", props, dialect="auto")
+    # the dialect resolved from the URL fixes it
+    append("DDL_DIALECT", dialect_for_url(derby_url))
     fixed = column_types("DDL_DIALECT")
     assert fixed["NAME"] == ("VARCHAR", 1024)
     assert fixed["PAYLOAD"][0] == "BLOB"
@@ -429,7 +422,7 @@ def test_ddl_type_overrides_land_in_derby_catalog(spark, derby_url, props):
 
     # per-call widened dialect: the override is data, not code
     wide = dataclasses.replace(DERBY, string_ddl="VARCHAR(4000)")
-    append_jdbc_table(df, derby_url, "DDL_WIDE", props, dialect=wide)
+    append("DDL_WIDE", wide)
     assert column_types("DDL_WIDE")["NAME"] == ("VARCHAR", 4000)
 
     # Postgres pin stays in sync with the live-proven shape

@@ -171,13 +171,12 @@ def test_loader_over_derby_appends_nothing_on_rerun(spark, zones, tmp_path, monk
     cannot compare CLOB, so the gate must not push a key range for
     string keys into the key read."""
     from dpe_energy_performance_analysis_etl_spark.config import EngineConfig
-    from dpe_energy_performance_analysis_etl_spark.sources import read_jdbc_table
     from dpe_energy_performance_analysis_etl_spark.sources.jdbc_dialect import execute_statements
 
     url = f"jdbc:derby:{tmp_path}/loaddb;create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     # unquoted DDL: Derby folds the names to upper case, which the
-    # sink's unquoted key read resolves
+    # sink's key read resolves case-insensitively
     execute_statements(spark, url, props, ["CREATE TABLE adresses (id_ban CLOB, label_ban CLOB)"])
     monkeypatch.setattr(EngineConfig, "jdbc_properties", property(lambda self: props))
     zones.jdbc_url = url
@@ -186,7 +185,28 @@ def test_loader_over_derby_appends_nothing_on_rerun(spark, zones, tmp_path, monk
     )
     assert DataLoader(spark, zones).run({"adresses": gold}) == {"adresses": 3}
     assert DataLoader(spark, zones).run({"adresses": gold}) == {"adresses": 0}
-    assert read_jdbc_table(spark, url, "adresses", props).count() == 3
+    assert spark.read.jdbc(url, "adresses", properties=props).count() == 3
+
+
+def test_loader_reruns_over_a_derby_table_it_created(spark, zones, tmp_path, monkeypatch):
+    """The loader's default JDBC sink creates the table itself on
+    embedded Derby: Spark's writer quotes the engine's lower-case
+    column names, so the table holds ``"id_ban"``, not ``ID_BAN``, and
+    the second run's key read must quote them too. It appends 0 rows
+    instead of failing on a column name the database folded to upper
+    case."""
+    from dpe_energy_performance_analysis_etl_spark.config import EngineConfig
+
+    url = f"jdbc:derby:{tmp_path}/owndb;create=true"
+    props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
+    monkeypatch.setattr(EngineConfig, "jdbc_properties", property(lambda self: props))
+    zones.jdbc_url = url
+    gold = spark.createDataFrame([("a", "x"), ("b", "y")], "id_ban string, label_ban string")
+    assert DataLoader(spark, zones).run({"adresses": gold}) == {"adresses": 2}
+    assert DataLoader(spark, zones).run({"adresses": gold}) == {"adresses": 0}
+    back = spark.read.jdbc(url, "adresses", properties=props)
+    assert back.columns == ["id_ban", "label_ban"]
+    assert back.count() == 2
 
 
 def _counted(fetch, acc):

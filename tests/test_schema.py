@@ -99,25 +99,21 @@ class TestSchemaEvolutionScan:
     def test_merge_schema_unions_generations(self, spark, tmp_path):
         """A zone written across schema generations (new column added
         later) must read as one evolved schema with null backfill."""
-        from dpe_energy_performance_analysis_etl_spark.sources.io import read_parquet
-
         zone = str(tmp_path / "zone")
         spark.createDataFrame([(1, "a")], "id long, name string").write.parquet(zone)
         spark.createDataFrame(
             [(2, "b", 9.5)], "id long, name string, score double"
         ).write.mode("append").parquet(zone)
 
-        evolved = read_parquet(spark, zone, merge_schema=True)
+        evolved = spark.read.option("mergeSchema", "true").parquet(zone)
         assert set(evolved.columns) == {"id", "name", "score"}
         rows = {r["id"]: r["score"] for r in evolved.collect()}
         assert rows[1] is None and rows[2] == 9.5
 
     def test_default_scan_unchanged(self, spark, tmp_path):
-        from dpe_energy_performance_analysis_etl_spark.sources.io import read_parquet
-
         zone = str(tmp_path / "zone2")
         spark.createDataFrame([(1, "a")], "id long, name string").write.parquet(zone)
-        assert read_parquet(spark, zone).count() == 1
+        assert spark.read.parquet(zone).count() == 1
 
 
 class TestXmlSource:

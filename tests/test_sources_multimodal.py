@@ -174,12 +174,11 @@ def test_json_lines_roundtrip_and_purge(spark, tmp_path):
     from dpe_energy_performance_analysis_etl_spark.sources import (
         purge_dir,
         read_json_lines,
-        write_json_lines,
     )
 
     df = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
     path = str(tmp_path / "nation_jsonl")
-    write_json_lines(df, path)
+    df.write.json(path)
     back = read_json_lines(spark, path, schema=df.schema)
     assert {(r.n_nationkey, r.n_name) for r in back.collect()} == {
         (r.n_nationkey, r.n_name) for r in df.collect()
@@ -192,12 +191,12 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     """partitionBy + filter ⇒ partition pruning: the scan must read
     only the matching directory (visible as PartitionFilters and in
     the input file count)."""
-    from dpe_energy_performance_analysis_etl_spark.sources import read_parquet, write_parquet
+    from dpe_energy_performance_analysis_etl_spark.sources import write_parquet
 
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     path = str(tmp_path / "orders_by_status")
     write_parquet(orders, path, partition_by=["o_orderstatus"])
-    pruned = read_parquet(spark, path).filter(F.col("o_orderstatus") == "F")
+    pruned = spark.read.parquet(path).filter(F.col("o_orderstatus") == "F")
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(o_orderstatus" in plan
     expect = orders.filter("o_orderstatus = 'F'").count()
@@ -220,13 +219,13 @@ def test_audio_features_framing(spark, media):
 
 
 def test_write_parquet_sorted_rowgroups(spark, tmp_path):
-    from dpe_energy_performance_analysis_etl_spark.sources import read_parquet, write_parquet
+    from dpe_energy_performance_analysis_etl_spark.sources import write_parquet
     from dpe_energy_performance_analysis_etl_spark.plans.queries import read_events
 
     ev = read_events(spark, "/root/testdata/sf0.001")
     path = str(tmp_path / "ev_sorted")
     write_parquet(ev, path, sort_by=["ts"])
-    back = read_parquet(spark, path)
+    back = spark.read.parquet(path)
     assert back.count() == ev.count()
     # each file covers a disjoint ts range (range partitioning)
     import pyspark.sql.functions as F

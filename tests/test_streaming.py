@@ -147,9 +147,7 @@ def test_stream_to_jdbc_idempotent(spark, events, tmp_path):
     q2 = stream_to_jdbc(spark, landing, ev.schema, url, "EVENTS_T", props, ["EVENT_ID"], ckpt2)
     q2.awaitTermination(120)
 
-    from dpe_energy_performance_analysis_etl_spark.sources import read_jdbc_table
-
-    out = read_jdbc_table(spark, url, "EVENTS_T", props)
+    out = spark.read.jdbc(url, "EVENTS_T", properties=props)
     assert out.count() == 500
     assert out.select("EVENT_ID").distinct().count() == 500
 
@@ -527,16 +525,13 @@ def test_gate_pushes_key_range_into_jdbc_scan(spark, tmp_path):
 def test_jdbc_table_exists_probe(spark, tmp_path):
     """Explicit metadata probe replaces read-and-catch existence
     checks (ADVICE r1: a transient failure must not read as 'absent')."""
-    from dpe_energy_performance_analysis_etl_spark.sources import (
-        append_jdbc_table,
-        jdbc_table_exists,
-    )
+    from dpe_energy_performance_analysis_etl_spark.sources import jdbc_table_exists
 
     url = f"jdbc:derby:{tmp_path}/probedb;create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     assert jdbc_table_exists(spark, url, "NOPE_T", props) is False
     df = spark.range(3).withColumnRenamed("id", "K")
-    append_jdbc_table(df, url, "PROBE_T", props)
+    df.write.jdbc(url, "PROBE_T", mode="append", properties=props)
     assert jdbc_table_exists(spark, url, "PROBE_T", props) is True
     # case-folding: unquoted DDL is stored upper-case in Derby
     assert jdbc_table_exists(spark, url, "probe_t", props) is True
