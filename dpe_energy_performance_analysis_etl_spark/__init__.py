@@ -4,7 +4,7 @@ fereol023/DPE-Energy-Performance-Analysis-ETL reference (pandas+Prefect,
 
 The engine is a library of generic, composable DataFrame operators
 (scan/project/filter/join/dedup/agg/window/set-op/sink — SURVEY.md §2),
-a schema subsystem (normalization, golden-config schemas, dtype
+a schema subsystem (normalization, validation gates, dtype
 persistence, autocast), medallion-zone I/O, pipeline classes mirroring
 the reference's Extract/Transform/Load public API, a Structured
 Streaming incremental-append surface, and large-scale training-data

@@ -7,7 +7,6 @@ from dpe_energy_performance_analysis_etl_spark.functions.scalar import (
     abs_diff,
     full_address,
     departement_from_iris,
-    arrondissement,
     conso_kwh_m2,
     consumption_diffs,
 )
@@ -21,7 +20,6 @@ __all__ = [
     "abs_diff",
     "full_address",
     "departement_from_iris",
-    "arrondissement",
     "conso_kwh_m2",
     "consumption_diffs",
 ]

@@ -180,14 +180,12 @@ class DataExtractor:
         return materialize_parquet(ademe, f"{self.config.zones.bronze}/ademe")
 
     # ------------------------------------------------------ step 5
-    def merge_all(self, ademe: DataFrame | None = None) -> DataFrame:
+    def merge_all(self, ademe: DataFrame) -> DataFrame:
         """Left join J2 (keys cast to string) + full dedup A4 →
         normalize names P2 → stamp batch_id F11 → silver
         (``extract.py:548-585``). Returns the silver ``extraction``
         files."""
         assert self.output is not None
-        if ademe is None:
-            ademe = self.spark.read.parquet(f"{self.config.zones.bronze}/ademe")
         merged = equi_join(
             ademe,
             self.output,

@@ -78,15 +78,10 @@ class DataLoader:
 
     # ------------------------------------------------- flow
     @log_run
-    def run(self, entities: dict[str, DataFrame] | None = None) -> dict[str, int]:
-        """Load all entities in FK-safe order (``load.py:181-212``);
-        reads the gold zone when no frames are passed. The gates run
-        concurrently, the appends one at a time in ``LOAD_ORDER``."""
-        if entities is None:
-            entities = {
-                name: self.spark.read.parquet(f"{self.config.zones.gold}/{name}")
-                for name in LOAD_ORDER
-            }
+    def run(self, entities: dict[str, DataFrame]) -> dict[str, int]:
+        """Load the gold frames in FK-safe order (``load.py:181-212``).
+        The gates run concurrently, the appends one at a time in
+        ``LOAD_ORDER``."""
         tables = [name for name in LOAD_ORDER if name in entities]
         gated = run_concurrently(
             self.spark, {name: partial(self._new_rows, entities[name], name) for name in tables}

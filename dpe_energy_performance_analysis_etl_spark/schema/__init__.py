@@ -6,8 +6,6 @@ from dpe_energy_performance_analysis_etl_spark.schema.core import (
     load_schema_json,
     apply_schema,
     autocast_string_columns,
-    GoldenSchema,
-    GoldenEntity,
 )
 
 __all__ = [
@@ -18,6 +16,4 @@ __all__ = [
     "load_schema_json",
     "apply_schema",
     "autocast_string_columns",
-    "GoldenSchema",
-    "GoldenEntity",
 ]

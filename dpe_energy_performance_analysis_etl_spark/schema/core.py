@@ -1,5 +1,5 @@
 """Schema subsystem: normalization, validation gates, persisted
-schemas, golden-config schemas, and whole-column autocast.
+schemas, and whole-column autocast.
 
 Reference parity (SURVEY §1.3):
   1. input validation (presence-only, case-tolerant) — ``extract.py:317-331``.
@@ -7,8 +7,9 @@ Reference parity (SURVEY §1.3):
      ``filestorage_helper.py:159-176``, ``transform.py:272-289``; the
      inference itself is try-numeric-then-datetime-else-string
      (``transform.py:84-102``).
-  3. golden (gold-zone) config schema with per-column type+default and
-     required list — ``schema_golden_data.json``, ``transform.py:215-236``.
+  3. the gold tables' columns, types and defaults
+     (``schema_golden_data.json``) are declared once, with their keys
+     and load order, as ``pipelines.transform.GOLD_TABLES``.
 
 Spark-first choices: persisted schemas are ``StructType.jsonValue()``
 (lossless, versionable); autocast decides per column with ONE
@@ -20,7 +21,6 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -154,73 +154,3 @@ def autocast_string_columns(
         else:
             out_cols.append(F.col(c))
     return df.select(*out_cols), decisions
-
-
-# ---------------------------------------------------------------- golden config schema
-
-_TYPE_MAP: dict[str, T.DataType] = {
-    "string": T.StringType(),
-    "str": T.StringType(),
-    "int": T.LongType(),
-    "int64": T.LongType(),
-    "float": T.DoubleType(),
-    "float64": T.DoubleType(),
-    "double": T.DoubleType(),
-    "datetime": T.TimestampType(),
-    "datetime64[ns]": T.TimestampType(),
-    "timestamp": T.TimestampType(),
-    "bool": T.BooleanType(),
-    "binary": T.BinaryType(),
-}
-
-
-@dataclass
-class GoldenEntity:
-    """One entity's config: ordered columns with types + defaults and
-    the required subset (``schema_golden_data.json`` shape read by
-    ``get_cols`` / ``get_default_value_from_golden_colname``,
-    ``transform.py:215-236``)."""
-
-    name: str
-    columns: dict[str, tuple[T.DataType, object]]  # name -> (type, default)
-    required: list[str]
-
-    @property
-    def struct(self) -> T.StructType:
-        return T.StructType([T.StructField(n, t, True) for n, (t, _) in self.columns.items()])
-
-    def conform(self, df: DataFrame) -> DataFrame:
-        """Project to this entity: select declared columns, adding any
-        missing ones as their default (SO2 set-difference fill,
-        ``transform.py:253-261``), cast all to declared types."""
-        cols = []
-        for n, (dtype, default) in self.columns.items():
-            if n in df.columns:
-                cols.append(F.col(n).cast(dtype).alias(n))
-            else:
-                cols.append(F.lit(default).cast(dtype).alias(n))
-        return df.select(*cols)
-
-
-class GoldenSchema:
-    """Parsed golden-config JSON: ``{"schema-<entity>": {"cols":
-    {name: {"type": ..., "default": ...}}, "required": [...]}}``."""
-
-    def __init__(self, raw: dict):
-        self.entities: dict[str, GoldenEntity] = {}
-        for key, spec in raw.items():
-            name = key.removeprefix("schema-")
-            cols = {
-                col: (_TYPE_MAP.get(str(meta.get("type", "string")).lower(), T.StringType()),
-                      meta.get("default"))
-                for col, meta in spec.get("cols", {}).items()
-            }
-            self.entities[name] = GoldenEntity(name, cols, list(spec.get("required", [])))
-
-    @classmethod
-    def from_file(cls, path: str) -> "GoldenSchema":
-        with open(path, encoding="utf-8") as fh:
-            return cls(json.load(fh))
-
-    def __getitem__(self, name: str) -> GoldenEntity:
-        return self.entities[name]

@@ -44,8 +44,8 @@ def normalize_name(name: str) -> str:
     """ASCII-fold, collapse runs of non-alphanumerics to ``_``,
     lowercase. Matches ``utils/fonctions.py:59-67`` exactly — edge
     underscores are KEPT (``_id_ademe`` is a primary key in the gold
-    schema; stripping it silently detaches the golden config from the
-    normalized silver columns).
+    schema; stripping it silently detaches the declared gold columns from
+    the normalized silver columns).
 
     >>> normalize_name("Consommation annuelle (MWh) ÉTÉ")
     'consommation_annuelle_mwh_ete'

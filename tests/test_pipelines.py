@@ -8,7 +8,7 @@ from dpe_energy_performance_analysis_etl_spark.pipelines import (
     DataLoader,
     DataTransformer,
 )
-from dpe_energy_performance_analysis_etl_spark.pipelines.transform import LOAD_ORDER
+from dpe_energy_performance_analysis_etl_spark.pipelines.transform import GOLD_TABLES, LOAD_ORDER
 
 
 @pytest.fixture()
@@ -80,6 +80,41 @@ def test_transform_and_load_idempotent(extractor, enedis_csv, spark, zones):
     loader2 = DataLoader(spark, zones, read_existing_keys=read_existing, append=append)
     second = loader2.run(entities)
     assert sum(second.values()) == 0, f"second run appended rows: {second}"
+
+
+def test_transform_writes_each_declared_gold_table(extractor, enedis_csv, spark, zones):
+    """Each gold file holds exactly its table's declared columns, in
+    order and with the declared types, and its primary key columns."""
+    silver = extractor.extract(enedis_csv)
+    assert set(DataTransformer(spark, silver, zones).run()) == set(GOLD_TABLES)
+    for name, (key, columns) in GOLD_TABLES.items():
+        schema = spark.read.parquet(f"{zones.zones.gold}/{name}").schema
+        assert set(key) <= set(schema.names), name
+        if columns:
+            declared = [(n, dtype) for n, (dtype, _) in columns.items()]
+            assert [(f.name, f.dataType) for f in schema] == declared, name
+
+
+def test_transform_without_enedis_consumption(spark, zones, enedis_csv, tmp_path,
+                                              fake_fetch_ban, fake_fetch_ademe):
+    """An Enedis CSV with neither the per-logement nor the per-site
+    consumption column: ``conso_kwh`` takes its default, and the
+    measured consumption falls back to the ADEME final one, so their
+    difference is 0."""
+    site = "consommation_annuelle_moyenne_par_site_de_l_adresse_mwh"
+    lines = [line.split(";") for line in open(enedis_csv).read().splitlines()]
+    drop = lines[0].index(site)
+    csv = tmp_path / "enedis_no_conso.csv"
+    csv.write_text("\n".join(";".join(f[:drop] + f[drop + 1:]) for f in lines) + "\n")
+    silver = DataExtractor(
+        spark, zones, fetch_ban=fake_fetch_ban, fetch_ademe=fake_fetch_ademe
+    ).extract(str(csv))
+    assert not [c for c in silver.columns if c.startswith("consommation_annuelle_moyenne")]
+    rows = (
+        DataTransformer(spark, silver, zones).run()["logements"]
+        .select("conso_kwh", "absolute_diff_conso_fin_act").collect()
+    )
+    assert rows and {(r.conso_kwh, r.absolute_diff_conso_fin_act) for r in rows} == {(-1.0, 0.0)}
 
 
 def test_transform_declared_schema_roundtrip(extractor, enedis_csv, spark, zones, tmp_path):

@@ -4,8 +4,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import types as T
 
+from dpe_energy_performance_analysis_etl_spark.pipelines.transform import conform
 from dpe_energy_performance_analysis_etl_spark.schema import (
-    GoldenSchema,
     SchemaValidationError,
     apply_schema,
     autocast_string_columns,
@@ -76,20 +76,13 @@ def test_apply_schema_coerces_and_fills(spark):
 
 
 def test_golden_schema_conform(spark):
-    golden = GoldenSchema(
-        {
-            "schema-ent": {
-                "cols": {
-                    "pk": {"type": "string", "default": "N/C"},
-                    "v": {"type": "float", "default": -1.0},
-                    "absent": {"type": "string", "default": "N/C"},
-                },
-                "required": ["pk"],
-            }
-        }
-    )
+    columns = {
+        "pk": (T.StringType(), "N/C"),
+        "v": (T.DoubleType(), -1.0),
+        "absent": (T.StringType(), "N/C"),
+    }
     df = spark.createDataFrame(pd.DataFrame({"pk": ["a"], "v": ["3,5"], "junk": [1]}))
-    out = golden["ent"].conform(df.withColumn("v", df.v.substr(1, 1).cast("double")))
+    out = conform(df.withColumn("v", df.v.substr(1, 1).cast("double")), columns)
     assert out.columns == ["pk", "v", "absent"]
     row = out.collect()[0]
     assert row.absent == "N/C"
