@@ -1,7 +1,7 @@
 """Idempotent-append sinks: each returns the pair
 ``(read_existing_keys(table, key_cols), append(df, table))`` that the
-ETL loader (``pipelines/load.py``) and the streaming loaders
-(``streaming/incremental.py``) hand to the gate
+ETL loader (``pipelines/load.py``) and the streaming JDBC loader
+(``streaming/incremental.py::stream_to_jdbc``) hand to the gate
 ``operators.anti_join_new_rows``.
 
 ``read_existing_keys`` returns ``None`` when the sink has no such
@@ -40,8 +40,9 @@ def _dir_has_data(spark: SparkSession, path: str) -> bool:
 
 def parquet_sink(spark: SparkSession, root: str):
     """Tables as parquet directories ``{root}/{table}`` — the
-    database-free sink, used by the CLI when no ENGINE_JDBC_URL is
-    configured and by ``incremental_append_stream``."""
+    database-free sink, used by the ETL CLI (``pipelines.etl.main``)
+    when no ENGINE_JDBC_URL is configured and by the ETL benchmark
+    (``perfbench/run.py``)."""
 
     def read_existing_keys(table: str, key_cols: list[str]) -> DataFrame | None:
         if not _dir_has_data(spark, f"{root}/{table}"):

@@ -11,11 +11,9 @@ from dpe_energy_performance_analysis_etl_spark.streaming.incremental import (
     maintained_iblt_stream,
     streaming_set_diff_vs,
     read_agg_state,
-    enrich_stream_static,
     versioned_merge_stream,
     cdc_apply_stream,
 )
-from dpe_energy_performance_analysis_etl_spark.operators.relational import key_bounds
 from dpe_energy_performance_analysis_etl_spark.streaming.stateful import (
     sessionize_stream,
     batch_closed_sessions,
@@ -34,10 +32,8 @@ __all__ = [
     "maintained_iblt_stream",
     "streaming_set_diff_vs",
     "read_agg_state",
-    "enrich_stream_static",
     "versioned_merge_stream",
     "cdc_apply_stream",
-    "key_bounds",
     "sessionize_stream",
     "batch_closed_sessions",
 ]

@@ -14,14 +14,44 @@ cron batches with batch_id lineage and idempotent anti-join appends
   - ``windowed_event_counts``: event-time tumbling window aggregation
     with a watermark for late data — the streaming twin of the batch
     ``events_tumbling_window`` query.
+
+Every query started here and in ``stateful.py`` runs once: it is
+checkpointed at the caller's ``checkpoint_dir`` and triggered with
+``Trigger.AvailableNow`` through ``_start_once``, so a run
+processes exactly the files that landed since the last one and then
+stops. ``continuous_projection_stream`` is the one exception: it
+demonstrates the continuous trigger and runs until stopped.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from dpe_energy_performance_analysis_etl_spark.sources.io import hadoop_fs
+
+
+def _start_once(writer: DataStreamWriter, checkpoint_dir: str) -> StreamingQuery:
+    """Start ``writer`` checkpointed at ``checkpoint_dir`` under
+    ``Trigger.AvailableNow``: process everything that has landed,
+    exactly once across restarts, then stop."""
+    return writer.option("checkpointLocation", checkpoint_dir).trigger(availableNow=True).start()
+
+
+def _start_parquet(df: DataFrame, target_dir: str, checkpoint_dir: str) -> StreamingQuery:
+    """Run-once append of ``df``'s finalized rows to parquet files
+    under ``target_dir``."""
+    return _start_once(
+        df.writeStream.format("parquet").option("path", target_dir).outputMode("append"),
+        checkpoint_dir,
+    )
+
+
+def _start_foreach_batch(df: DataFrame, fn, checkpoint_dir: str) -> StreamingQuery:
+    """Run-once ``fn(batch, batch_id)`` on each micro-batch of ``df``."""
+    return _start_once(
+        df.writeStream.foreachBatch(fn).outputMode("update"), checkpoint_dir
+    )
 
 
 def incremental_append_stream(
@@ -31,7 +61,6 @@ def incremental_append_stream(
     target_dir: str,
     checkpoint_dir: str,
     key_cols: list[str],
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Exactly-once idempotent append from a landing directory.
 
@@ -64,14 +93,7 @@ def incremental_append_stream(
         finally:
             batch.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(upsert_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, upsert_batch, checkpoint_dir)
 
 
 def windowed_event_counts(
@@ -83,7 +105,6 @@ def windowed_event_counts(
     ts_col: str = "ts",
     window: str = "1 hour",
     watermark: str = "2 hours",
-    available_now: bool = True,
     slide: str | None = None,
 ) -> StreamingQuery:
     """Tumbling-window counts/sums with late-data watermark, appended
@@ -100,15 +121,7 @@ def windowed_event_counts(
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
         .select(F.col("w").start.alias("window_start"), "event_type", "n_events", "total_value")
     )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet(agg, target_dir, checkpoint_dir)
 
 
 def streaming_dedup(
@@ -120,7 +133,6 @@ def streaming_dedup(
     key_cols: list[str],
     ts_col: str = "ts",
     watermark: str = "1 hour",
-    available_now: bool = True,
     within_watermark: bool = False,
 ) -> StreamingQuery:
     """Streaming exact deduplication: first occurrence of each key
@@ -143,15 +155,7 @@ def streaming_dedup(
         deduped = marked.dropDuplicatesWithinWatermark(key_cols)
     else:
         deduped = marked.dropDuplicates(key_cols)
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet(deduped, target_dir, checkpoint_dir)
 
 
 def stream_to_jdbc(
@@ -163,7 +167,6 @@ def stream_to_jdbc(
     properties: dict[str, str],
     key_cols: list[str],
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming idempotent load into a live database: per micro-batch,
     the idempotent-append gate ``operators.anti_join_new_rows`` against
@@ -199,14 +202,7 @@ def stream_to_jdbc(
         finally:
             batch.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(load_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, load_batch, checkpoint_dir)
 
 
 def interval_join_streams(
@@ -221,7 +217,6 @@ def interval_join_streams(
     ts_col: str = "ts",
     upper: str = "10 minutes",
     watermark: str = "1 hour",
-    available_now: bool = True,
     how: str = "inner",
 ) -> StreamingQuery:
     """Stream-stream event-time interval join: for each left row,
@@ -235,7 +230,7 @@ def interval_join_streams(
     r_* columns — but only once the watermark PROVES no match can
     still arrive (the time-bound is what makes streaming outer joins
     decidable at all; Spark rejects unbounded stream-stream outers).
-    Under availableNow the final watermark = max event time seen, so
+    Under AvailableNow the final watermark = max event time seen, so
     unmatched rows inside the last horizon stay in state for the next
     run — the same end-of-input semantics as session windows.
 
@@ -265,15 +260,7 @@ def interval_join_streams(
         ),
         how,
     ).drop("r_key")
-    writer = (
-        joined.writeStream.format("parquet")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet(joined, target_dir, checkpoint_dir)
 
 
 def continuous_projection_stream(
@@ -322,7 +309,6 @@ def maintained_agg_stream(
     checkpoint_dir: str,
     keys: list[str],
     specs: dict[str, tuple[str, str]],
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously-maintained aggregate: the streaming face of
     ``operators/incremental.py::merge_agg_state``.
@@ -359,8 +345,7 @@ def maintained_agg_stream(
         )
 
     return versioned_merge_stream(
-        spark, source_dir, schema, state_dir, checkpoint_dir, merge,
-        available_now=available_now,
+        spark, source_dir, schema, state_dir, checkpoint_dir, merge
     )
 
 
@@ -372,7 +357,6 @@ def maintained_user_days_stream(
     checkpoint_dir: str,
     user_col: str = "user_id",
     ts_col: str = "ts",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Stream-maintained (user, day) activity SET — the state behind
     exact sliding-distinct DAU/MAU (operators/temporal.py
@@ -404,8 +388,7 @@ def maintained_user_days_stream(
         return state.select("u", "d").unionByName(delta).distinct()
 
     return versioned_merge_stream(
-        spark, source_dir, schema, state_dir, checkpoint_dir, merge,
-        available_now=available_now,
+        spark, source_dir, schema, state_dir, checkpoint_dir, merge
     )
 
 
@@ -443,38 +426,6 @@ def read_agg_state(spark: SparkSession, state_dir: str) -> DataFrame:
     return spark.read.parquet(f"{state_dir}/v={versions[-1]}")
 
 
-def enrich_stream_static(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    dim: DataFrame,
-    on: list[str],
-    output_dir: str,
-    checkpoint_dir: str,
-    how: str = "left",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Stream-static enrichment join: every micro-batch joins the
-    (small, slowly-changing) dimension — the streaming face of J1/J2
-    (Enedis×BAN / ADEME lookups, ``extract.py:517-585``).
-
-    The static side is explicitly broadcast: no shuffle of the
-    stream, no stream-stream state store, and the dimension is
-    re-resolved per micro-batch (a dim refresh is picked up without
-    restarting the query — standard Spark stream-static semantics)."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    enriched = stream.join(F.broadcast(dim), on=on, how=how)
-    writer = (
-        enriched.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def versioned_merge_stream(
     spark: SparkSession,
     source_dir: str,
@@ -482,7 +433,6 @@ def versioned_merge_stream(
     state_dir: str,
     checkpoint_dir: str,
     merge,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Generic incrementally-maintained materialized view: per
     micro-batch, ``merge(prev_state_or_None, batch) -> new_state``
@@ -503,14 +453,7 @@ def versioned_merge_stream(
         new_state.write.mode("overwrite").parquet(f"{state_dir}/v={batch_id}")
         _gc_state_versions(sess, state_dir, keep=prev[-1:] + [batch_id])
 
-    writer = (
-        stream.writeStream.foreachBatch(do_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, do_merge, checkpoint_dir)
 
 
 def cdc_apply_stream(
@@ -524,7 +467,6 @@ def cdc_apply_stream(
     op_col: str = "op",
     ts_col: str = "ts",
     ord_col: str | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming CDC materialization: each micro-batch of I/U/D
     records folds into the maintained snapshot via
@@ -544,8 +486,7 @@ def cdc_apply_stream(
         )
 
     return versioned_merge_stream(
-        spark, source_dir, schema, state_dir, checkpoint_dir, merge,
-        available_now=available_now,
+        spark, source_dir, schema, state_dir, checkpoint_dir, merge
     )
 
 
@@ -557,8 +498,6 @@ def enrich_stream(
     on: str | list[str],
     target_dir: str,
     checkpoint_dir: str,
-    how: str = "left",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Stream-static dimension enrichment: every micro-batch of the
     file stream joins the (bounded) static dimension, broadcast so
@@ -567,18 +506,12 @@ def enrich_stream(
     feed). The static side is re-resolved per micro-batch, so a
     dimension backed by a table picks up updates between batches;
     stateless, no watermark needed (unlike stream-stream interval
-    joins, which bound state instead)."""
+    joins, which bound state instead). A left join: stream rows
+    without a dimension match are kept with null dimension columns.
+    ``on`` is one key column or a list of them."""
     stream = spark.readStream.schema(schema).parquet(source_dir)
-    joined = stream.join(F.broadcast(dim), on=on, how=how)
-    writer = (
-        joined.writeStream.format("parquet")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    joined = stream.join(F.broadcast(dim), on=on, how="left")
+    return _start_parquet(joined, target_dir, checkpoint_dir)
 
 
 def maintained_iblt_stream(
@@ -590,7 +523,6 @@ def maintained_iblt_stream(
     key_col: str,
     n_cells: int = 8192,
     k: int = 3,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Continuously-maintained IBLT cell summary of every key ever
     streamed — the streaming face of ``operators/diff.py``'s set
@@ -629,8 +561,7 @@ def maintained_iblt_stream(
         return iblt_merge(state, delta)
 
     return versioned_merge_stream(
-        spark, source_dir, schema, state_dir, checkpoint_dir, merge,
-        available_now=available_now,
+        spark, source_dir, schema, state_dir, checkpoint_dir, merge
     )
 
 

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from dpe_energy_performance_analysis_etl_spark.streaming.incremental import _start_parquet
+
 SESSION_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -89,11 +91,12 @@ def sessionize_stream(
     target_dir: str,
     checkpoint_dir: str,
     gap_seconds: int = 1800,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Stream CLOSED sessions (30-min default inactivity gap) from a
-    landing directory of event parquet; open sessions persist in the
-    state store across restarts (checkpointed)."""
+    landing directory of event parquet, run once under
+    ``Trigger.AvailableNow`` like every starter in ``incremental.py``;
+    open sessions persist in the state store across restarts
+    (checkpointed)."""
     stream = spark.readStream.schema(schema).parquet(source_dir)
     sessions = (
         stream.select("user_id", "ts", "value")
@@ -106,15 +109,7 @@ def sessionize_stream(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    writer = (
-        sessions.writeStream.format("parquet")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet(sessions, target_dir, checkpoint_dir)
 
 
 def batch_closed_sessions(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:

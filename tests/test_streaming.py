@@ -36,13 +36,13 @@ def test_incremental_append_exactly_once(spark, events, tmp_path):
 
     events.filter("event_id < 400").write.parquet(landing)
     q = incremental_append_stream(spark, landing, EVENT_SCHEMA, target, ckpt, key_cols=["event_id"])
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     assert spark.read.parquet(target).count() == 400
 
     # second file arrives, OVERLAPPING ids 300-399 — must not duplicate
     events.filter("event_id >= 300 AND event_id < 600").write.mode("append").parquet(landing)
     q2 = incremental_append_stream(spark, landing, EVENT_SCHEMA, target, ckpt, key_cols=["event_id"])
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     out = spark.read.parquet(target)
     assert out.count() == 600
     assert out.select("event_id").distinct().count() == 600
@@ -57,7 +57,7 @@ def test_windowed_stream_matches_batch(spark, events, tmp_path):
     events.write.parquet(landing)
 
     q = windowed_event_counts(spark, landing, EVENT_SCHEMA, target, ckpt)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = spark.read.parquet(target)
 
     batch = (
@@ -90,10 +90,10 @@ def test_stateful_sessionization_across_batches(spark, events, tmp_path):
     cutoff = events.agg(F.expr("percentile(CAST(ts AS DOUBLE), 0.5)")).collect()[0][0]
     events.filter(F.col("ts").cast("double") <= cutoff).write.parquet(f"{landing}/b1")
     q = sessionize_stream(spark, f"{landing}/b1", EVENT_SCHEMA, target, ckpt, gap_seconds=1800)
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     events.filter(F.col("ts").cast("double") > cutoff).write.parquet(f"{landing}/b1", mode="append")
     q2 = sessionize_stream(spark, f"{landing}/b1", EVENT_SCHEMA, target, ckpt, gap_seconds=1800)
-    q2.awaitTermination(180)
+    assert q2.awaitTermination(180)
 
     got = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
@@ -120,7 +120,7 @@ def test_streaming_dedup_drops_duplicates(spark, events, tmp_path):
     subset.write.parquet(landing)
     subset.limit(120).write.mode("append").parquet(landing)  # planted dups
     q = streaming_dedup(spark, landing, EVENT_SCHEMA, target, ckpt, key_cols=["event_id"])
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     out = spark.read.parquet(target)
     assert out.count() == 300
     assert out.select("event_id").distinct().count() == 300
@@ -139,13 +139,13 @@ def test_stream_to_jdbc_idempotent(spark, events, tmp_path):
     ev = events.toDF(*[c.upper() for c in events.columns]).drop("PROPS")
     ev.filter("EVENT_ID < 300").write.parquet(landing)
     q = stream_to_jdbc(spark, landing, ev.schema, url, "EVENTS_T", props, ["EVENT_ID"], ckpt1)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     # overlapping delivery with a FRESH checkpoint (worst case: the
     # stream itself replays everything) — table must still dedupe
     ev.filter("EVENT_ID < 500").write.mode("overwrite").parquet(landing)
     q2 = stream_to_jdbc(spark, landing, ev.schema, url, "EVENTS_T", props, ["EVENT_ID"], ckpt2)
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
 
     out = spark.read.jdbc(url, "EVENTS_T", properties=props)
     assert out.count() == 500
@@ -196,7 +196,7 @@ def test_interval_join_streams_matches_batch(spark, events, tmp_path):
         spark, left_dir, right_dir, EVENT_SCHEMA, EVENT_SCHEMA,
         target, ckpt, key_col="user_id", upper="10 minutes",
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = {
         (r.user_id, r.l_event_id, r.r_event_id)
         for r in spark.read.parquet(target).collect()
@@ -260,7 +260,7 @@ def test_maintained_agg_stream_matches_recompute(spark, tmp_path):
 
     def run():
         q = maintained_agg_stream(spark, src, schema, state, ckpt, ["k"], specs)
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     mkbatch(0, 500, 1)
     run()
@@ -279,12 +279,12 @@ def test_maintained_agg_stream_matches_recompute(spark, tmp_path):
     assert a == b
 
 
-def test_enrich_stream_static_matches_batch_join(spark, tmp_path):
-    """Stream-static broadcast enrichment == the batch join, and the
-    plan never shuffles the stream side."""
+def test_enrich_stream_list_key_matches_batch_join(spark, tmp_path):
+    """Stream-static broadcast enrichment on a list ``on`` key == the
+    batch join, unmatched keys null-filled."""
     from pyspark.sql import functions as F, types as T
 
-    from dpe_energy_performance_analysis_etl_spark.streaming import enrich_stream_static
+    from dpe_energy_performance_analysis_etl_spark.streaming import enrich_stream
 
     src = str(tmp_path / "landing")
     out = str(tmp_path / "enriched")
@@ -299,8 +299,8 @@ def test_enrich_stream_static_matches_batch_join(spark, tmp_path):
     schema = T.StructType(
         [T.StructField("fact_id", T.LongType()), T.StructField("dim_key", T.LongType())]
     )
-    q = enrich_stream_static(spark, src, schema, dim, ["dim_key"], out, ckpt)
-    q.awaitTermination(120)
+    q = enrich_stream(spark, src, schema, dim, ["dim_key"], out, ckpt)
+    assert q.awaitTermination(120)
 
     got = spark.read.parquet(out)
     want = spark.read.parquet(src).join(F.broadcast(dim), on=["dim_key"], how="left")
@@ -348,7 +348,7 @@ def test_cdc_apply_stream_matches_batch_apply(spark, tmp_path):
     def run(rows):
         spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
         q = cdc_apply_stream(spark, src, schema, base, state, ckpt, key="k", ord_col="ord")
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     run(batch1)
     run(batch2)
@@ -387,7 +387,7 @@ def test_windowed_stream_drops_late_data(spark, tmp_path):
         q = windowed_event_counts(
             spark, landing, schema, target, ckpt, window="1 hour", watermark="2 hours"
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     # batch 1: 3 events in the 10:00 window; max ts 13:59 -> watermark 11:59,
     # so the 10:00 window (ends 11:00) finalizes and is emitted
@@ -468,10 +468,8 @@ def test_pruned_existing_keys_pushes_range_into_scan(spark, events, tmp_path):
 def test_incremental_append_null_keys_and_range(spark, events, tmp_path):
     """Null keys in the batch widen the prune with IS NULL; existing
     null-key rows still dedupe across restarts."""
-    from dpe_energy_performance_analysis_etl_spark.streaming import (
-        incremental_append_stream,
-        key_bounds,
-    )
+    from dpe_energy_performance_analysis_etl_spark.operators import key_bounds
+    from dpe_energy_performance_analysis_etl_spark.streaming import incremental_append_stream
 
     landing = str(tmp_path / "landing")
     target = str(tmp_path / "target")
@@ -485,13 +483,13 @@ def test_incremental_append_null_keys_and_range(spark, events, tmp_path):
     q = incremental_append_stream(
         spark, landing, EVENT_SCHEMA, target, str(tmp_path / "c1"), key_cols=["event_id"]
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     # overlapping redelivery incl. the null key, fresh checkpoint
     with_null.write.mode("append").parquet(landing)
     q2 = incremental_append_stream(
         spark, landing, EVENT_SCHEMA, target, str(tmp_path / "c2"), key_cols=["event_id"]
     )
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     out = spark.read.parquet(target)
     assert out.count() == 100
     assert out.filter("event_id IS NULL").count() == 1
@@ -564,7 +562,7 @@ def test_native_session_window_stream_matches_batch(spark, events, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     got = {
         (r.user_id, r.w_start, r.n_events)
@@ -606,7 +604,7 @@ def test_dedup_within_watermark_drops_redelivery_with_shifted_ts(spark, events, 
         spark, landing, EVENT_SCHEMA, target, ckpt,
         key_cols=["event_id"], within_watermark=True,
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     out = spark.read.parquet(target)
     assert out.count() == 300
     assert out.select("event_id").distinct().count() == 300
@@ -626,7 +624,7 @@ def test_hopping_window_stream_matches_batch(spark, events, tmp_path):
     q = windowed_event_counts(
         spark, landing, EVENT_SCHEMA, target, ckpt, window="2 hours", slide="1 hour"
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = spark.read.parquet(target)
     batch = (
         events.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
@@ -657,7 +655,7 @@ def test_stream_static_enrichment_matches_batch(spark, events, tmp_path):
         .withColumn("segment", F.concat(F.lit("seg"), (F.col("user_id") % 3).cast("string")))
     )
     q = enrich_stream(spark, landing, EVENT_SCHEMA, dim, "user_id", target, ckpt)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = spark.read.parquet(target)
     batch = events.join(dim, "user_id", "left")
     assert got.count() == events.count() == batch.count()
@@ -701,7 +699,7 @@ def test_mg_heavy_hitters_stream_exact_regime_and_restart(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
+        assert q.awaitTermination(180)
 
     run_once()
     # latest summary row per (shard, item) = the final state emission
@@ -753,7 +751,7 @@ def test_mg_heavy_hitters_stream_bounded_state(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     res = spark.read.parquet(target)
     per_trigger = res.groupBy("shard").count().collect()
     assert all(r["count"] <= 4 * 10 for r in per_trigger)  # <= k rows per emission x triggers
@@ -785,7 +783,7 @@ def test_interval_join_left_outer_emits_unmatched_after_watermark(spark, events,
         target, ckpt, key_col="user_id", upper="10 minutes",
         watermark="1 minute", how="left_outer",
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     out = spark.read.parquet(target)
     got = {
         (r.user_id, r.l_event_id, r.r_event_id)
@@ -856,7 +854,7 @@ def test_cdc_chunks_streaming_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     got = sorted(map(tuple, spark.read.parquet(out).collect()))
     want = sorted(map(tuple, cdc_chunks(docs).collect()))
@@ -891,7 +889,7 @@ def test_maintained_iblt_stream_reconciles_vs_snapshot(spark, tmp_path):
     q = maintained_iblt_stream(
         spark, src, schema, state, ckpt, "key", n_cells=1024, k=3
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     # snapshot: keys 100..499 -> left_only = 0..99, right_only = 400..499
     snap = spark.range(100, 500).select(F.col("id").alias("key"))
@@ -921,7 +919,7 @@ def test_maintained_iblt_stream_reconciles_vs_snapshot(spark, tmp_path):
     q = maintained_iblt_stream(
         spark, src, schema, state, ckpt, "key", n_cells=1024, k=3
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got2 = {
         (r["key"], r["side"])
         for r in streaming_set_diff_vs(
@@ -970,13 +968,13 @@ def test_streaming_bradley_terry_leaderboard_matches_batch(spark, tmp_path):
         spark, src, schema, state, ckpt, ["winner", "loser"],
         {"n": ("count", "winner")},
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     spark.createDataFrame(all_rows[half:], schema).write.mode("append").parquet(src)
     q = maintained_agg_stream(
         spark, src, schema, state, ckpt, ["winner", "loser"],
         {"n": ("count", "winner")},
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     stream_lb = sorted(
         map(tuple, bradley_terry_from_counts(read_agg_state(spark, state)).collect())
@@ -1036,7 +1034,7 @@ def test_maintained_user_days_stream_dau_mau_matches_batch(spark, tmp_path):
         str(tmp_path / "state"),
         str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     state = read_agg_state(spark, str(tmp_path / "state"))
     got = sorted(

@@ -112,7 +112,6 @@ ALLOWED: dict[tuple[str, str], str] = {
     ("operators/temporal.py", "seasonal_decompose"): "domain: per-phase medians (period-bounded)",
     ("operators/temporal.py", "seasonal_outliers"): "scalar: center/MAD rows",
     # --- streaming (dimension-enrichment API: dim is small by contract) ---
-    ("streaming/incremental.py", "enrich_stream_static"): "flag/domain: dimension table contract",
     ("streaming/incremental.py", "enrich_stream"): "flag/domain: dimension table contract",
     # --- text ---
     ("text/analysis.py", "distinctive_terms_by_source"): "domain: per-source totals + scalars",
